@@ -23,6 +23,7 @@ final class IndexReader(
     conf: Conf = Conf.default,
     pinVersion: Option[Int] = None) {
   import spark.implicits._
+  import Bm25Query.cleanTerms
 
   val manifest: Option[Manifest] =
     pinVersion.map(SegmentStore.read(spark, root, _)).orElse(SegmentStore.latest(spark, root))
@@ -136,7 +137,7 @@ final class IndexReader(
     * the dictionary join so the label lookup sees each doc once.
     */
   def membershipAny(termsIn: Seq[String]): DataFrame = {
-    val terms = termsIn.filter(t => t != null && t.nonEmpty).distinct
+    val terms = cleanTerms(termsIn)
     if (terms.isEmpty || manifest.isEmpty) return emptyMembers
     if (terms.length == 1) return membership(terms.head)
     val paths = termBucketPaths(terms)
@@ -434,6 +435,28 @@ final class IndexReader(
     ordered.limit(n)
   }
 
+  /** The caller's doc-values frame as every doc-values surface reads it:
+    * `convCol` renamed to `conv_id`, plus the value columns `cols`. The index
+    * stores postings only; field values live in the caller's frame (one or
+    * more rows per conversation).
+    */
+  private def docValues(vals: DataFrame, convCol: String)(cols: Column*): DataFrame =
+    vals.select((col(convCol).as("conv_id") +: cols): _*)
+
+  /** `hits` — any frame keyed by `conv_id`: a match set, a scored set, a
+    * sample — joined on `conv_id` to [[docValues]]. Inner by default, so a
+    * hit with no value row drops; the feature and decay scorers pass "left"
+    * to keep such a hit at its lexical score.
+    */
+  private def joinValues(hits: DataFrame, vals: DataFrame, convCol: String,
+      how: String = "inner")(cols: Column*): DataFrame =
+    hits.join(docValues(vals, convCol)(cols: _*), Seq("conv_id"), how)
+
+  /** The ES missing-value rule for a numeric doc value: null, or NaN after
+    * the double cast, is missing — ignored by every metric and bucket.
+    */
+  private def present(v: Column): Column = v.isNotNull && !isnan(v)
+
   /** Date-histogram facet (the Elasticsearch `date_histogram` aggregation):
     * matching documents of `term` bucketed by their timestamp truncated to
     * `unit`. The engine's index stores postings only — document field values
@@ -447,8 +470,7 @@ final class IndexReader(
     */
   def dateHistogram(term: String, meta: DataFrame, convCol: String,
       tsCol: String, unit: String = "day"): DataFrame =
-    membership(term)
-      .join(meta.select(col(convCol).as("conv_id"), col(tsCol).as("__ts")), "conv_id")
+    joinValues(membership(term), meta, convCol)(col(tsCol).as("__ts"))
       .groupBy(date_format(date_trunc(unit, col("__ts")), "yyyy-MM-dd HH:mm:ss").as("bucket"))
       .agg(count(lit(1)).as("hits"))
 
@@ -514,12 +536,10 @@ final class IndexReader(
           (if (hi.isInfinite) lit(true) else v < lit(hi))
         when(acc.isNull && cond, lit(name)).otherwise(acc)
     }
-    membership(term)
-      .join(meta.select(col(convCol).as("conv_id"), col(valCol).cast("double").as("__v")),
-        "conv_id")
+    joinValues(membership(term), meta, convCol)(col(valCol).cast("double").as("__v"))
       // ES range-agg semantics: docs missing the field (null, or NaN after
       // the cast) are ignored, never emitted as a spurious null bucket
-      .where(v.isNotNull && !isnan(v))
+      .where(present(v))
       .groupBy(bucket.as("bucket"))
       .agg(count(lit(1)).as("hits"))
   }
@@ -541,10 +561,9 @@ final class IndexReader(
   def searchSorted(term: String, meta: DataFrame, convCol: String,
       valCol: String, ascending: Boolean = false, k: Int = 10): DataFrame = {
     val v = col("sort_val")
-    val joined = membership(term)
-      .join(meta.select(col(convCol).as("conv_id"),
-        col(valCol).cast("double").as("sort_val")), "conv_id")
-      .where(v.isNotNull && !isnan(v))
+    val joined = joinValues(membership(term), meta, convCol)(
+        col(valCol).cast("double").as("sort_val"))
+      .where(present(v))
     joined.orderBy(if (ascending) v.asc else v.desc, col("conv_id").asc).limit(k)
   }
 
@@ -565,10 +584,8 @@ final class IndexReader(
     val after =
       if (ascending) v > afterVal || (v === afterVal && col("conv_id") > afterConv)
       else v < afterVal || (v === afterVal && col("conv_id") > afterConv)
-    membership(term)
-      .join(meta.select(col(convCol).as("conv_id"),
-        col(valCol).cast("double").as("sort_val")), "conv_id")
-      .where(v.isNotNull && !isnan(v) && after)
+    joinValues(membership(term), meta, convCol)(col(valCol).cast("double").as("sort_val"))
+      .where(present(v) && after)
       .orderBy(if (ascending) v.asc else v.desc, col("conv_id").asc).limit(k)
   }
 
@@ -590,9 +607,8 @@ final class IndexReader(
       mustNot: Seq[String] = Nil): DataFrame = {
     val w = org.apache.spark.sql.expressions.Window
       .partitionBy("grp").orderBy(col("score").desc, col("conv_id").asc)
-    bm25ScoredAll(terms, conjunctive, mustNot)
-      .join(meta.select(col(convCol).as("conv_id"),
-        col(groupCol).cast("string").as("grp")), "conv_id")
+    joinValues(bm25ScoredAll(terms, conjunctive, mustNot), meta, convCol)(
+        col(groupCol).cast("string").as("grp"))
       .withColumn("__rn", row_number().over(w))
       .where(col("__rn") === 1).drop("__rn")
       .select(col("grp"), col("conv_id"), col("score"))
@@ -618,7 +634,7 @@ final class IndexReader(
     * @return (conv_id, score) top-k, score desc then conv_id asc.
     */
   def bm25SynonymsTopK(groups: Seq[Seq[String]], k: Int): DataFrame = {
-    val gs = groups.map(_.filter(t => t != null && t.nonEmpty).distinct)
+    val gs = groups.map(cleanTerms)
       .filter(_.nonEmpty)
     if (gs.isEmpty || k <= 0 || manifest.isEmpty) return emptyHits
     val m = manifest.get
@@ -666,10 +682,8 @@ final class IndexReader(
   def statsAgg(term: String, meta: DataFrame, convCol: String,
       valCol: String): DataFrame = {
     val v = col("__v")
-    membership(term)
-      .join(meta.select(col(convCol).as("conv_id"),
-        col(valCol).cast("double").as("__v")), "conv_id")
-      .where(v.isNotNull && !isnan(v))
+    joinValues(membership(term), meta, convCol)(col(valCol).cast("double").as("__v"))
+      .where(present(v))
       .agg(count(lit(1)).as("n"), min(v).as("min_v"), max(v).as("max_v"),
         sum(v).as("sum_v"), avg(v).as("avg_v"))
   }
@@ -689,10 +703,8 @@ final class IndexReader(
     require(pcts.nonEmpty && pcts.forall(p => p >= 0.0 && p <= 1.0),
       "percentiles must be in [0, 1]")
     val v = col("__v")
-    membership(term)
-      .join(meta.select(col(convCol).as("conv_id"),
-        col(valCol).cast("double").as("__v")), "conv_id")
-      .where(v.isNotNull && !isnan(v))
+    joinValues(membership(term), meta, convCol)(col(valCol).cast("double").as("__v"))
+      .where(present(v))
       .agg(expr(s"percentile(__v, array(${pcts.mkString(", ")}))").as("__vs"))
       .select(posexplode(col("__vs")).as(Seq("__i", "value")))
       .withColumn("pct", element_at(typedLit(pcts), col("__i") + 1))
@@ -716,10 +728,8 @@ final class IndexReader(
       values.zipWithIndex.map { case (x, i) =>
         count(when(v <= x, lit(1))).as(s"__c$i")
       }
-    membership(term)
-      .join(meta.select(col(convCol).as("conv_id"),
-        col(valCol).cast("double").as("__v")), "conv_id")
-      .where(v.isNotNull && !isnan(v))
+    joinValues(membership(term), meta, convCol)(col(valCol).cast("double").as("__v"))
+      .where(present(v))
       .agg(aggs.head, aggs.tail: _*)
       .select(posexplode(array(values.indices.map(i =>
         col(s"__c$i").cast("double") / col("__n")): _*)).as(Seq("__i", "__f")))
@@ -737,10 +747,8 @@ final class IndexReader(
   def extendedStatsAgg(term: String, meta: DataFrame, convCol: String,
       valCol: String, sigma: Double = 2.0): DataFrame = {
     val v = col("__v")
-    membership(term)
-      .join(meta.select(col(convCol).as("conv_id"),
-        col(valCol).cast("double").as("__v")), "conv_id")
-      .where(v.isNotNull && !isnan(v))
+    joinValues(membership(term), meta, convCol)(col(valCol).cast("double").as("__v"))
+      .where(present(v))
       .agg(count(lit(1)).as("n"), min(v).as("min_v"), max(v).as("max_v"),
         sum(v).as("sum_v"), avg(v).as("avg_v"),
         sum(v * v).as("sum_sq"), var_pop(v).as("variance"),
@@ -758,11 +766,10 @@ final class IndexReader(
   def weightedAvgAgg(term: String, meta: DataFrame, convCol: String,
       valCol: String, weightCol: String): DataFrame = {
     val v = col("__v"); val w = col("__w")
-    membership(term)
-      .join(meta.select(col(convCol).as("conv_id"),
+    joinValues(membership(term), meta, convCol)(
         col(valCol).cast("double").as("__v"),
-        col(weightCol).cast("double").as("__w")), "conv_id")
-      .where(v.isNotNull && !isnan(v) && w.isNotNull && !isnan(w))
+        col(weightCol).cast("double").as("__w"))
+      .where(present(v) && present(w))
       .agg((sum(v * w) / sum(w)).as("w_avg"))
   }
 
@@ -779,10 +786,9 @@ final class IndexReader(
   def madAgg(term: String, meta: DataFrame, convCol: String,
       valCol: String): DataFrame = {
     val v = col("__v")
-    val vals = membership(term)
-      .join(meta.select(col(convCol).as("conv_id"),
-        col(valCol).cast("double").as("__v")), "conv_id")
-      .where(v.isNotNull && !isnan(v))
+    val vals = joinValues(membership(term), meta, convCol)(
+        col(valCol).cast("double").as("__v"))
+      .where(present(v))
     val med = vals.agg(expr("percentile(__v, 0.5)").as("__med"))
     vals.crossJoin(broadcast(med))
       .agg(expr("percentile(abs(__v - __med), 0.5)").as("mad"))
@@ -799,9 +805,7 @@ final class IndexReader(
     * frames fuse via a broadcast cross join. */
   def stringStatsAgg(term: String, meta: DataFrame, convCol: String,
       strCol: String): DataFrame = {
-    val vals = membership(term)
-      .join(meta.select(col(convCol).as("conv_id"), col(strCol).as("__s")),
-        "conv_id")
+    val vals = joinValues(membership(term), meta, convCol)(col(strCol).as("__s"))
       .where(col("__s").isNotNull)
     val lens = vals.agg(count(lit(1)).as("n"),
       min(length(col("__s"))).as("min_len"),
@@ -825,9 +829,7 @@ final class IndexReader(
     * conv) — distinctness is over values, not rows. */
   def cardinalityAgg(term: String, meta: DataFrame, convCol: String,
       valCol: String): DataFrame =
-    membership(term)
-      .join(meta.select(col(convCol).as("conv_id"), col(valCol).as("__v")),
-        "conv_id")
+    joinValues(membership(term), meta, convCol)(col(valCol).as("__v"))
       .where(col("__v").isNotNull)
       .agg(countDistinct(col("__v")).as("n_distinct"))
 
@@ -845,7 +847,7 @@ final class IndexReader(
     */
   def disMaxTopK(queries: Seq[Seq[String]], tieBreaker: Double, k: Int): DataFrame = {
     require(tieBreaker >= 0.0 && tieBreaker <= 1.0, "tieBreaker must be in [0, 1]")
-    val qs = queries.map(_.filter(t => t != null && t.nonEmpty).distinct)
+    val qs = queries.map(cleanTerms)
       .filter(_.nonEmpty)
     if (qs.isEmpty || k <= 0 || manifest.isEmpty) return emptyHits
     val scored = qs.map(g => bm25ScoredAll(g)).reduce(_ unionByName _)
@@ -887,9 +889,7 @@ final class IndexReader(
   def termsAgg(term: String, meta: DataFrame, convCol: String,
       valCol: String, size: Int = 10): DataFrame = {
     require(size >= 1, "size must be >= 1")
-    membership(term)
-      .join(meta.select(col(convCol).as("conv_id"),
-        col(valCol).cast("string").as("value")), "conv_id")
+    joinValues(membership(term), meta, convCol)(col(valCol).cast("string").as("value"))
       .where(col("value").isNotNull)
       .select("conv_id", "value").distinct()
       .groupBy("value").agg(count(lit(1)).as("n_docs"))
@@ -905,10 +905,8 @@ final class IndexReader(
       valCol: String, interval: Double): DataFrame = {
     require(interval > 0.0, "interval must be > 0")
     val v = col("__v")
-    membership(term)
-      .join(meta.select(col(convCol).as("conv_id"),
-        col(valCol).cast("double").as("__v")), "conv_id")
-      .where(v.isNotNull && !isnan(v))
+    joinValues(membership(term), meta, convCol)(col(valCol).cast("double").as("__v"))
+      .where(present(v))
       .groupBy((floor(v / interval) * interval).as("bucket"))
       .agg(count(lit(1)).as("hits"))
   }
@@ -931,10 +929,9 @@ final class IndexReader(
       key1Col: String, key2Col: String, size: Int = 10,
       after: Option[(String, String)] = None): DataFrame = {
     require(size >= 1, "size must be >= 1")
-    val base = membership(term)
-      .join(meta.select(col(convCol).as("conv_id"),
+    val base = joinValues(membership(term), meta, convCol)(
         col(key1Col).cast("string").as("k1"),
-        col(key2Col).cast("string").as("k2")), "conv_id")
+        col(key2Col).cast("string").as("k2"))
       .where(col("k1").isNotNull && col("k2").isNotNull)
     val paged = after match {
       case Some((a1, a2)) =>
@@ -951,9 +948,7 @@ final class IndexReader(
     */
   def cardinalityApprox(term: String, meta: DataFrame, convCol: String,
       valCol: String, rsd: Double = 0.05): DataFrame =
-    membership(term)
-      .join(meta.select(col(convCol).as("conv_id"), col(valCol).as("__v")),
-        "conv_id")
+    joinValues(membership(term), meta, convCol)(col(valCol).as("__v"))
       .where(col("__v").isNotNull)
       .agg(approx_count_distinct(col("__v"), rsd).as("n_distinct"))
 
@@ -1020,9 +1015,7 @@ final class IndexReader(
       textCol: String, nTokens: Int = 3, size: Int = 10): DataFrame = {
     require(nTokens >= 1, "nTokens must be >= 1")
     require(size >= 1, "size must be >= 1")
-    membership(term)
-      .join(turns.select(col(convCol).as("conv_id"), col(textCol).as("__t")),
-        "conv_id")
+    joinValues(membership(term), turns, convCol)(col(textCol).as("__t"))
       .select(concat_ws(" ", slice(split(
         regexp_replace(col("__t"), "[0-9]+", "<num>"), " "), 1, nTokens))
         .as("category"))
@@ -1059,11 +1052,9 @@ final class IndexReader(
     val keep = if (numerator == 256) lit(true)
       else substring(md5(concat(lit(seed), col("conv_id"))), 1, 2) < f"$numerator%02x"
     val v = col("__v")
-    membership(term)
-      .where(keep)
-      .join(meta.select(col(convCol).as("conv_id"),
-        col(valCol).cast("double").as("__v")), "conv_id")
-      .where(v.isNotNull && !isnan(v))
+    joinValues(membership(term).where(keep), meta, convCol)(
+        col(valCol).cast("double").as("__v"))
+      .where(present(v))
       .agg(count(lit(1)).as("n_sampled"),
         round(count(lit(1)) * 256.0 / numerator, 4).as("est_n_docs"),
         round(sum(v) * 256.0 / numerator, 4).as("est_sum"))
@@ -1094,10 +1085,9 @@ final class IndexReader(
     require(buckets >= 1, "buckets must be >= 1")
     import org.apache.spark.TaskContext
     val v = col("__v")
-    val vals = membership(term)
-      .join(meta.select(col(convCol).as("conv_id"),
-        col(valCol).cast("double").as("__v")), "conv_id")
-      .where(v.isNotNull && !isnan(v))
+    val vals = joinValues(membership(term), meta, convCol)(
+        col(valCol).cast("double").as("__v"))
+      .where(present(v))
       .select(v, col("conv_id"))
       .repartitionByRange(v.asc, col("conv_id").asc)
       .sortWithinPartitions(v.asc, col("conv_id").asc)
@@ -1174,10 +1164,9 @@ final class IndexReader(
   def multiTermsAgg(term: String, meta: DataFrame, convCol: String,
       key1Col: String, key2Col: String, size: Int = 10): DataFrame = {
     require(size >= 1, "size must be >= 1")
-    membership(term)
-      .join(meta.select(col(convCol).as("conv_id"),
+    joinValues(membership(term), meta, convCol)(
         col(key1Col).cast("string").as("k1"),
-        col(key2Col).cast("string").as("k2")), "conv_id")
+        col(key2Col).cast("string").as("k2"))
       .where(col("k1").isNotNull && col("k2").isNotNull)
       .select("conv_id", "k1", "k2").distinct()
       .groupBy("k1", "k2").agg(count(lit(1)).as("n_docs"))
@@ -1195,13 +1184,8 @@ final class IndexReader(
     */
   def missingAgg(term: String, meta: DataFrame, convCol: String,
       valCol: String): DataFrame = {
-    val present = meta
-      .select(col(convCol).as("conv_id"), col(valCol).as("__v"))
-      .where(col("__v").isNotNull)
-      .select("conv_id").distinct()
-      .withColumn("__has", lit(1))
-    membership(term)
-      .join(present, Seq("conv_id"), "left")
+    val has = meta.where(col(valCol).isNotNull).select(col(convCol)).distinct()
+    joinValues(membership(term), has, convCol, "left")(lit(1).as("__has"))
       .agg(count(when(col("__has").isNull, lit(1))).as("n_missing"))
   }
 
@@ -1281,9 +1265,7 @@ final class IndexReader(
     */
   def valueCountAgg(term: String, vals: DataFrame, convCol: String,
       valCol: String): DataFrame =
-    membership(term)
-      .join(vals.select(col(convCol).as("conv_id"), col(valCol).as("__v")),
-        "conv_id")
+    joinValues(membership(term), vals, convCol)(col(valCol).as("__v"))
       .agg(count(col("__v")).as("n_values"))
 
   /** Date-range aggregation (the Elasticsearch `date_range` agg): matching
@@ -1312,9 +1294,7 @@ final class IndexReader(
         when(acc.isNull && cond, lit(name)).otherwise(acc)
       case (acc, _) => acc
     }
-    membership(term)
-      .join(meta.select(col(convCol).as("conv_id"),
-        col(tsCol).cast("timestamp").as("__ts")), "conv_id")
+    joinValues(membership(term), meta, convCol)(col(tsCol).cast("timestamp").as("__ts"))
       .where(v.isNotNull)
       .groupBy(bucket.as("bucket"))
       .agg(count(lit(1)).as("hits"))
@@ -1333,12 +1313,11 @@ final class IndexReader(
     */
   def globalAgg(term: String, meta: DataFrame, convCol: String,
       valCol: String): DataFrame = {
-    val m = meta.select(col(convCol).as("conv_id"),
-      col(valCol).cast("double").as("__v"))
-    membership(term).join(m, "conv_id")
+    val v = col(valCol).cast("double")
+    joinValues(membership(term), meta, convCol)(v.as("__v"))
       .agg(count(lit(1)).as("hits"), round(avg(col("__v")), 4).as("avg_v"))
-      .crossJoin(m.agg(count(lit(1)).as("global_docs"),
-        round(avg(col("__v")), 4).as("global_avg_v")))
+      .crossJoin(meta.agg(count(lit(1)).as("global_docs"),
+        round(avg(v), 4).as("global_avg_v")))
   }
 
   /** Terms aggregation ordered by a sub-aggregation metric (the
@@ -1358,9 +1337,9 @@ final class IndexReader(
   def termsAggByMetric(term: String, meta: DataFrame, convCol: String,
       keyCol: String, valCol: String, size: Int): DataFrame = {
     require(size >= 1, "size must be >= 1")
-    membership(term)
-      .join(meta.select(col(convCol).as("conv_id"), col(keyCol).as("__k"),
-        col(valCol).cast("double").as("__v")), "conv_id")
+    joinValues(membership(term), meta, convCol)(
+        col(keyCol).as("__k"),
+        col(valCol).cast("double").as("__v"))
       .groupBy(col("__k").as("key"))
       .agg(count(lit(1)).as("n_docs"), round(avg(col("__v")), 4).as("avg_v"))
       .orderBy(col("avg_v").desc, col("key").asc)
@@ -1422,9 +1401,8 @@ final class IndexReader(
     val empty = Seq.empty[(String, Int, String, Double)]
       .toDF("value", "rank", "conv_id", "score")
     if (manifest.isEmpty) return empty
-    val joined = bm25ScoredAll(terms, conjunctive)
-      .join(meta.select(col(convCol).as("conv_id"),
-        col(valCol).cast("string").as("value")), "conv_id")
+    val joined = joinValues(bm25ScoredAll(terms, conjunctive), meta, convCol)(
+        col(valCol).cast("string").as("value"))
       .where(col("value").isNotNull)
       .select(col("value"), col("conv_id"), col("score"))
       // one row per (value, conv): turn-level meta repeats the pair, and a
@@ -1476,9 +1454,7 @@ final class IndexReader(
     val sample = bm25ScoredAll(terms, conjunctive)
       .orderBy(col("score").desc, col("conv_id").asc).limit(sampleSize)
       .select("conv_id")
-    sample
-      .join(meta.select(col(convCol).as("conv_id"),
-        col(valCol).cast("string").as("value")), "conv_id")
+    joinValues(sample, meta, convCol)(col(valCol).cast("string").as("value"))
       .where(col("value").isNotNull)
       .select("conv_id", "value").distinct()
       .groupBy("value").agg(count(lit(1)).as("n_docs"))
@@ -1500,9 +1476,6 @@ final class IndexReader(
       conjunctive: Boolean = false): DataFrame = {
     require(maxDocsPerValue >= 1, "maxDocsPerValue must be >= 1")
     require(sampleSize >= 1 && size >= 1, "sampleSize and size must be >= 1")
-    val metaSel = meta.select(col(convCol).as("conv_id"),
-      col(diversifyCol).cast("string").as("__dk"),
-      col(valCol).cast("string").as("value"))
     val wDiv = org.apache.spark.sql.expressions.Window
       .partitionBy("__dk").orderBy(col("score").desc, col("conv_id").asc)
     // partial per-partition top-maxDocsPerValue per diversify key ahead of
@@ -1512,8 +1485,8 @@ final class IndexReader(
     // ≤ partitions × keys × maxDocsPerValue rows and the window is exact
     // (the global per-key top is a subset of the per-partition tops)
     val joined = bm25ScoredAll(terms, conjunctive)
-      .join(metaSel.select("conv_id", "__dk").where(col("__dk").isNotNull)
-        .distinct(), "conv_id")
+      .join(docValues(meta, convCol)(col(diversifyCol).cast("string").as("__dk"))
+        .where(col("__dk").isNotNull).distinct(), "conv_id")
       .select(col("__dk"), col("conv_id"), col("score"))
       .as[(String, String, Double)]
     val prePruned = joined.mapPartitions { it =>
@@ -1536,8 +1509,7 @@ final class IndexReader(
       .where(col("__dr") <= maxDocsPerValue)
       .orderBy(col("score").desc, col("conv_id").asc).limit(sampleSize)
       .select("conv_id")
-    sample
-      .join(metaSel.select("conv_id", "value"), "conv_id")
+    joinValues(sample, meta, convCol)(col(valCol).cast("string").as("value"))
       .where(col("value").isNotNull)
       .select("conv_id", "value").distinct()
       .groupBy("value").agg(count(lit(1)).as("n_docs"))
@@ -1566,9 +1538,8 @@ final class IndexReader(
       .toDF("bucket", "hits", "interval_secs")
     val ladder = Seq(1L, 60L, 3600L, 86400L, 7L * 86400L, 30L * 86400L,
       365L * 86400L)
-    val joined = membership(term)
-      .join(meta.select(col(convCol).as("conv_id"),
-        unix_timestamp(col(tsCol)).as("__e")), "conv_id")
+    val joined = joinValues(membership(term), meta, convCol)(
+        unix_timestamp(col(tsCol)).as("__e"))
       .where(col("__e").isNotNull)
     val mm = joined.agg(min(col("__e")).as("lo"), max(col("__e")).as("hi"))
       .collect()
@@ -1596,10 +1567,9 @@ final class IndexReader(
     */
   def matrixStatsAgg(term: String, meta: DataFrame, convCol: String,
       val1Col: String, val2Col: String): DataFrame =
-    membership(term)
-      .join(meta.select(col(convCol).as("conv_id"),
+    joinValues(membership(term), meta, convCol)(
         col(val1Col).cast("double").as("__a"),
-        col(val2Col).cast("double").as("__b")), "conv_id")
+        col(val2Col).cast("double").as("__b"))
       .where(col("__a").isNotNull && col("__b").isNotNull)
       .agg(count(lit(1)).as("n"),
         round(avg(col("__a")), 4).as("mean1"),
@@ -1644,9 +1614,8 @@ final class IndexReader(
       case other =>
         throw new IllegalArgumentException(s"unknown decay fn: $other")
     }
-    bm25ScoredAll(terms, conjunctive)
-      .join(meta.select(col(convCol).as("conv_id"),
-        col(valCol).cast("double").as("__v")), Seq("conv_id"), "left")
+    joinValues(bm25ScoredAll(terms, conjunctive), meta, convCol, "left")(
+        col(valCol).cast("double").as("__v"))
       .select(col("conv_id"), (col("score") *
         when(v.isNull || isnan(v), lit(1.0)).otherwise(mult)).as("score"))
       .orderBy(col("score").desc, col("conv_id").asc).limit(k)
@@ -1674,9 +1643,8 @@ final class IndexReader(
       case other =>
         throw new IllegalArgumentException(s"unknown modifier: $other")
     }
-    bm25ScoredAll(terms, conjunctive)
-      .join(meta.select(col(convCol).as("conv_id"),
-        col(valCol).cast("double").as("__v")), Seq("conv_id"), "left")
+    joinValues(bm25ScoredAll(terms, conjunctive), meta, convCol, "left")(
+        col(valCol).cast("double").as("__v"))
       .select(col("conv_id"), (col("score") * mult).as("score"))
       .orderBy(col("score").desc, col("conv_id").asc).limit(k)
   }
@@ -1696,7 +1664,7 @@ final class IndexReader(
       "negativeBoost must be in [0, 1]")
     if (k <= 0) return emptyHits
     val scored = bm25ScoredAll(positive, conjunctive)
-    val neg = negative.filter(t => t != null && t.nonEmpty).distinct
+    val neg = cleanTerms(negative)
     val demoted =
       if (neg.isEmpty) scored
       else scored.join(
@@ -1721,9 +1689,8 @@ final class IndexReader(
     require(n >= 1, "n must be >= 1")
     val w = org.apache.spark.sql.expressions.Window
       .partitionBy("grp").orderBy(col("score").desc, col("conv_id").asc)
-    bm25ScoredAll(terms, conjunctive, mustNot)
-      .join(meta.select(col(convCol).as("conv_id"),
-        col(groupCol).cast("string").as("grp")), "conv_id")
+    joinValues(bm25ScoredAll(terms, conjunctive, mustNot), meta, convCol)(
+        col(groupCol).cast("string").as("grp"))
       .withColumn("rn", row_number().over(w))
       .where(col("rn") <= n)
       .select(col("grp"), col("rn"), col("conv_id"), col("score"))
@@ -1922,7 +1889,7 @@ final class IndexReader(
     * stays strictly ascending after one merge-sort.
     */
   private def phraseSlots(slotsIn: Seq[Seq[String]], slop: Int): DataFrame = {
-    val slots = slotsIn.map(_.filter(t => t != null && t.nonEmpty).distinct)
+    val slots = slotsIn.map(cleanTerms)
     if (slots.isEmpty || slots.exists(_.isEmpty) || manifest.isEmpty)
       return emptyMembers
     val m = manifest.get
@@ -1999,7 +1966,7 @@ final class IndexReader(
     * distinct document positions, so no same-position guard is needed.
     */
   def spanNear(termsIn: Seq[String], slop: Int): DataFrame = {
-    val terms = termsIn.filter(t => t != null && t.nonEmpty).distinct
+    val terms = cleanTerms(termsIn)
     if (terms.isEmpty || manifest.isEmpty) return emptyMembers
     if (terms.length == 1) return membership(terms.head)
     val m = manifest.get
@@ -2063,7 +2030,7 @@ final class IndexReader(
     * @return distinct matching conv_ids.
     */
   def spanNearAny(slots: Seq[Seq[String]], slop: Int): DataFrame = {
-    val cleaned = slots.map(_.filter(t => t != null && t.nonEmpty).distinct)
+    val cleaned = slots.map(cleanTerms)
       .filter(_.nonEmpty)
     if (cleaned.isEmpty || manifest.isEmpty) return emptyMembers
     if (cleaned.length == 1) {
@@ -2246,7 +2213,7 @@ final class IndexReader(
     * must not rescale them). Exact and fully distributed: the terms'
     * bucket-pruned blocks decode in [[termTf]], the weights ride a
     * broadcast join, per-doc scores fold in one map-side-combinable
-    * groupBy, and only the top-k window orders. Zero or negative weights
+    * groupBy, and only a bounded top-k orders. Zero or negative weights
     * are rejected rather than silently dropped.
     *
     * @return (conv_id, score) rows, score desc then conv asc, ≤ k of them.
@@ -2261,11 +2228,7 @@ final class IndexReader(
       .join(broadcast(wdf), "term")
       .groupBy("conv_id")
       .agg(sum(col("__w") * col("tf")).as("score"))
-    val w = org.apache.spark.sql.expressions.Window
-      .orderBy(col("score").desc, col("conv_id").asc)
-    scored.withColumn("rn", row_number().over(w))
-      .where(col("rn") <= k)
-      .select("conv_id", "score")
+    scored.orderBy(col("score").desc, col("conv_id").asc).limit(k)
   }
 
   /** Sliced scored export (the Elasticsearch sliced-scroll contract,
@@ -2451,7 +2414,7 @@ final class IndexReader(
     if (m.numDocs == 0 || m.avgdl <= 0.0) return empty
     val k1 = conf.k1; val b = conf.b; val avgdl = m.avgdl; val n = m.numDocs
     val perQuery = queries.map { case (qid, termsIn) =>
-      val terms = termsIn.filter(t => t != null && t.nonEmpty).distinct
+      val terms = cleanTerms(termsIn)
       require(terms.nonEmpty, s"query '$qid' has no terms")
       terms.map(postingBlocks).reduce(_ union _)
         .flatMap { blk =>
@@ -2554,7 +2517,7 @@ final class IndexReader(
       maxExpansions: Int = 50, k: Int = 10): DataFrame = {
     if (prefix == null || prefix.isEmpty || maxExpansions <= 0 || k <= 0 ||
         manifest.isEmpty) return emptyHits
-    val terms = termsIn.filter(t => t != null && t.nonEmpty).distinct
+    val terms = cleanTerms(termsIn)
     val expanded = expandPrefix(prefix, maxExpansions)
     val groups = terms.map(Seq(_)) ++
       (if (expanded.nonEmpty) Seq(expanded) else Nil)
@@ -2957,21 +2920,13 @@ final class IndexReader(
     */
   def cumulativeCardinality(term: String, turns: DataFrame, convCol: String,
       tsCol: String, unit: String = "day"): DataFrame = {
-    val matched = membership(term)
-    val bucketed = turns
-      .select(col(convCol).as("conv_id"),
-        date_format(date_trunc(unit, col(tsCol)), "yyyy-MM-dd HH:mm:ss")
-          .as("bucket"))
-      .join(matched, "conv_id")
+    val bucketed = joinValues(membership(term), turns, convCol)(
+        date_format(date_trunc(unit, col(tsCol)), "yyyy-MM-dd HH:mm:ss").as("bucket"))
+    val firstSeen = bucketed
       .groupBy("conv_id").agg(min(col("bucket")).as("first_bucket"))
-    val firstSeen = bucketed.groupBy(col("first_bucket").as("bucket"))
+      .groupBy(col("first_bucket").as("bucket"))
       .agg(count(lit(1)).as("nfirst"))
-    val allBuckets = turns
-      .select(col(convCol).as("conv_id"),
-        date_format(date_trunc(unit, col(tsCol)), "yyyy-MM-dd HH:mm:ss")
-          .as("bucket"))
-      .join(matched, "conv_id")
-      .select("bucket").distinct()
+    val allBuckets = bucketed.select("bucket").distinct()
     val w = org.apache.spark.sql.expressions.Window.orderBy("bucket")
       .rowsBetween(org.apache.spark.sql.expressions.Window.unboundedPreceding, 0)
     allBuckets.join(firstSeen, Seq("bucket"), "left")
@@ -2996,9 +2951,7 @@ final class IndexReader(
       throw new IllegalArgumentException(s"unknown unit: $unit"))
     val per = secs.getOrElse(rateUnit,
       throw new IllegalArgumentException(s"unknown rateUnit: $rateUnit"))
-    membership(term)
-      .join(turns.select(col(convCol).as("conv_id"), col(tsCol).as("__ts")),
-        "conv_id")
+    joinValues(membership(term), turns, convCol)(col(tsCol).as("__ts"))
       .groupBy(date_format(date_trunc(unit, col("__ts")),
         "yyyy-MM-dd HH:mm:ss").as("bucket"))
       .agg(count(lit(1)).as("hits"))
@@ -3018,10 +2971,8 @@ final class IndexReader(
     */
   def boxplotAgg(term: String, meta: DataFrame, convCol: String,
       valCol: String): DataFrame =
-    membership(term)
-      .join(meta.select(col(convCol).as("conv_id"),
-        col(valCol).cast("double").as("__v")), "conv_id")
-      .where(col("__v").isNotNull && !isnan(col("__v")))
+    joinValues(membership(term), meta, convCol)(col(valCol).cast("double").as("__v"))
+      .where(present(col("__v")))
       .agg(count(lit(1)).as("n"),
         round(min(col("__v")), 4).as("min_v"),
         round(expr("percentile(__v, 0.25)"), 4).as("q1"),
@@ -3042,10 +2993,8 @@ final class IndexReader(
   def tTestAgg(termA: String, termB: String, meta: DataFrame,
       convCol: String, valCol: String): DataFrame = {
     def side(term: String, tag: String): DataFrame =
-      membership(term)
-        .join(meta.select(col(convCol).as("conv_id"),
-          col(valCol).cast("double").as("__v")), "conv_id")
-        .where(col("__v").isNotNull && !isnan(col("__v")))
+      joinValues(membership(term), meta, convCol)(col(valCol).cast("double").as("__v"))
+        .where(present(col("__v")))
         .agg(count(lit(1)).as(s"n_$tag"),
           avg(col("__v")).as(s"mean_$tag"),
           var_samp(col("__v")).as(s"var_$tag"))
@@ -3122,11 +3071,10 @@ final class IndexReader(
     val w = org.apache.spark.sql.expressions.Window
       .partitionBy("value")
       .orderBy(col("sort_v").desc, col("conv_id").asc)
-    membership(term)
-      .join(meta.select(col(convCol).as("conv_id"),
+    joinValues(membership(term), meta, convCol)(
         col(keyCol).cast("string").as("value"),
         col(sortCol).as("sort_v"),
-        col(metricCol).cast("double").as("metric")), "conv_id")
+        col(metricCol).cast("double").as("metric"))
       .where(col("value").isNotNull)
       .withColumn("rn", row_number().over(w))
       .where(col("rn") === 1)
@@ -3152,7 +3100,7 @@ final class IndexReader(
   def termsSet(termsIn: Seq[String], meta: DataFrame, convCol: String,
       minCol: String): DataFrame = {
     val empty = Seq.empty[(String, Long)].toDF("conv_id", "matched")
-    val terms = termsIn.filter(t => t != null && t.nonEmpty).distinct
+    val terms = cleanTerms(termsIn)
     if (terms.isEmpty || manifest.isEmpty) return empty
     val paths = termBucketPaths(terms)
     if (paths.isEmpty) return empty
@@ -3163,12 +3111,12 @@ final class IndexReader(
       .flatMap { case (_, n, bin) => Delta.decode(bin, n) }
       .toDF("docId")
       .groupBy("docId").agg(count(lit(1)).as("matched"))
-    matched.join(docsView, "docId")
-      .join(meta.select(col(convCol).as("convId"),
-        col(minCol).cast("long").as("__min")), "convId")
+    val hits = matched.join(docsView, "docId")
+      .select(col("convId").as("conv_id"), col("matched"))
+    joinValues(hits, meta, convCol)(col(minCol).cast("long").as("__min"))
       .where(col("__min").isNotNull && col("__min") >= 1 &&
         col("matched") >= col("__min"))
-      .select(col("convId").as("conv_id"), col("matched"))
+      .select(col("conv_id"), col("matched"))
   }
 
   /** Term vectors (the Elasticsearch `_termvectors` API in its default
@@ -3301,23 +3249,14 @@ final class IndexReader(
   def bm25TopK(termsIn: Seq[String], k: Int, conjunctive: Boolean = false,
       mustNot: Seq[String] = Nil, minShouldMatch: Int = 1,
       boosts: Map[String, Double] = Map.empty,
-      minScore: Double = Double.NegativeInfinity): DataFrame = {
-    require(boosts.values.forall(_ > 0.0), "boosts must be > 0")
-    val terms = termsIn.filter(t => t != null && t.nonEmpty).distinct
-    // a term both required and excluded stays excluded (t AND NOT t = ∅ in
-    // conjunctive mode; disjunctive docs holding it drop) — plain boolean
-    val ex = mustNot.filter(t => t != null && t.nonEmpty).distinct
-    if (terms.isEmpty || k <= 0 || manifest.isEmpty) return emptyHits
-    if (!conjunctive && minShouldMatch > terms.length) return emptyHits
-    val m = manifest.get
-    if (m.numDocs == 0 || m.avgdl <= 0.0) return emptyHits
+      minScore: Double = Double.NegativeInfinity): DataFrame =
     // minScore (the ES `min_score` clause) reaches the DAAT kernel as the
     // initial WAND threshold — never a post-filter (Daat.scoreRange floor):
     // a selective floor skips whole sub-floor blocks without decoding them,
     // and the result may legitimately hold FEWER than k rows
-    hitsDf(topKRowsImpl(terms, ex, k, conjunctive, m, minMatch = minShouldMatch,
-      boosts = boosts, floor = minScore))
-  }
+    Bm25Query.of(manifest, termsIn, k, conjunctive, mustNot, minShouldMatch,
+      boosts, floor = minScore)
+      .fold(emptyHits)(q => hitsDf(topKRowsImpl(q, manifest.get)))
 
   /** [[bm25TopKRows]] under externally-supplied corpus statistics — the
     * per-shard leg of sharded dfs_query_then_fetch
@@ -3329,16 +3268,10 @@ final class IndexReader(
   private[killa] def bm25TopKRowsStats(termsIn: Seq[String], k: Int,
       stats: CorpusStats, conjunctive: Boolean = false,
       mustNot: Seq[String] = Nil, minShouldMatch: Int = 1,
-      boosts: Map[String, Double] = Map.empty): Array[(String, Double)] = {
-    require(boosts.values.forall(_ > 0.0), "boosts must be > 0")
-    val terms = termsIn.filter(t => t != null && t.nonEmpty).distinct
-    val ex = mustNot.filter(t => t != null && t.nonEmpty).distinct
-    if (terms.isEmpty || k <= 0 || manifest.isEmpty) return Array.empty
-    if (!conjunctive && minShouldMatch > terms.length) return Array.empty
-    if (stats.numDocs == 0 || stats.avgdl <= 0.0) return Array.empty
-    topKRowsImpl(terms, ex, k, conjunctive, manifest.get,
-      minMatch = minShouldMatch, boosts = boosts, stats = Some(stats))
-  }
+      boosts: Map[String, Double] = Map.empty): Array[(String, Double)] =
+    Bm25Query.of(manifest, termsIn, k, conjunctive, mustNot, minShouldMatch,
+      boosts, Some(stats))
+      .fold(Array.empty[(String, Double)])(topKRowsImpl(_, manifest.get))
 
   /** Serving-shaped top-k: the same exact BM25 result as [[bm25TopK]] (rank
     * identity spec-pinned) returned as materialized rows — what a query
@@ -3348,17 +3281,9 @@ final class IndexReader(
     */
   def bm25TopKRows(termsIn: Seq[String], k: Int, conjunctive: Boolean = false,
       mustNot: Seq[String] = Nil, minShouldMatch: Int = 1,
-      boosts: Map[String, Double] = Map.empty): Array[(String, Double)] = {
-    require(boosts.values.forall(_ > 0.0), "boosts must be > 0")
-    val terms = termsIn.filter(t => t != null && t.nonEmpty).distinct
-    val ex = mustNot.filter(t => t != null && t.nonEmpty).distinct
-    if (terms.isEmpty || k <= 0 || manifest.isEmpty) return Array.empty
-    if (!conjunctive && minShouldMatch > terms.length) return Array.empty
-    val m = manifest.get
-    if (m.numDocs == 0 || m.avgdl <= 0.0) return Array.empty
-    topKRowsImpl(terms, ex, k, conjunctive, m, minMatch = minShouldMatch,
-      boosts = boosts)
-  }
+      boosts: Map[String, Double] = Map.empty): Array[(String, Double)] =
+    Bm25Query.of(manifest, termsIn, k, conjunctive, mustNot, minShouldMatch, boosts)
+      .fold(Array.empty[(String, Double)])(topKRowsImpl(_, manifest.get))
 
   /** Deep pagination — the Lucene `searchAfter` analog: the exact top-k of
     * the documents ranking strictly AFTER the cursor `(afterScore,
@@ -3375,11 +3300,11 @@ final class IndexReader(
   def bm25TopKAfter(termsIn: Seq[String], k: Int,
       afterConv: String, afterScore: Double,
       conjunctive: Boolean = false, mustNot: Seq[String] = Nil): DataFrame = {
-    val terms = termsIn.filter(t => t != null && t.nonEmpty).distinct
-    val ex = mustNot.filter(t => t != null && t.nonEmpty).distinct
-    if (terms.isEmpty || k <= 0 || manifest.isEmpty) return emptyHits
+    val q = Bm25Query.of(manifest, termsIn, k, conjunctive, mustNot) match {
+      case Some(q) => q
+      case None => return emptyHits
+    }
     val m = manifest.get
-    if (m.numDocs == 0 || m.avgdl <= 0.0) return emptyHits
     // The kernel's equal-score tie-break compares docIds, which equals
     // conv_id rank order only for a single-generation dictionary (fullBuild
     // assigns docId = rank of conv_id; batchSeq stays 0 through positional
@@ -3393,7 +3318,7 @@ final class IndexReader(
     if (m.batchSeq > 0) {
       var kk = math.max(2 * k, 64)
       while (true) {
-        val rows = topKRowsImpl(terms, ex, kk, conjunctive, m)
+        val rows = topKRowsImpl(q.withK(kk), m)
         // rows are (score desc, conv asc); the page starts strictly after
         // the cursor in that total order
         val page = rows.dropWhile { case (c, s) =>
@@ -3412,7 +3337,7 @@ final class IndexReader(
     val afterDoc = docsView.where(col("convId") === afterConv)
       .select("docId").collect().headOption.map(_.getLong(0))
       .getOrElse(Long.MaxValue)
-    hitsDf(topKRowsImpl(terms, ex, k, conjunctive, m, Some((afterScore, afterDoc))))
+    hitsDf(topKRowsImpl(q.withAfter(afterScore, afterDoc), m))
   }
 
   /** Doc-values FILTERED top-k BM25 — the ES `bool: {must: match(terms),
@@ -3439,18 +3364,10 @@ final class IndexReader(
   def bm25TopKFiltered(termsIn: Seq[String], k: Int, filterConvs: DataFrame,
       conjunctive: Boolean = false, mustNot: Seq[String] = Nil,
       minShouldMatch: Int = 1,
-      boosts: Map[String, Double] = Map.empty): DataFrame = {
-    require(boosts.values.forall(_ > 0.0), "boosts must be > 0")
-    val terms = termsIn.filter(t => t != null && t.nonEmpty).distinct
-    val ex = mustNot.filter(t => t != null && t.nonEmpty).distinct
-    if (terms.isEmpty || k <= 0 || manifest.isEmpty) return emptyHits
-    if (!conjunctive && minShouldMatch > terms.length) return emptyHits
-    val m = manifest.get
-    if (m.numDocs == 0 || m.avgdl <= 0.0) return emptyHits
-    hitsDf(topKRowsImpl(terms, ex, k, conjunctive, m,
-      include = Some(filterBlocks(filterConvs)), minMatch = minShouldMatch,
-      boosts = boosts))
-  }
+      boosts: Map[String, Double] = Map.empty): DataFrame =
+    Bm25Query.of(manifest, termsIn, k, conjunctive, mustNot, minShouldMatch, boosts)
+      .fold(emptyHits)(q =>
+        hitsDf(topKRowsImpl(q.withInclude(filterBlocks(filterConvs)), manifest.get)))
 
   /** Encode a conv_id filter set into sorted, non-overlapping docId blocks —
     * the include-cursor input of [[bm25TopKFiltered]]. Distributed: dictionary
@@ -3525,8 +3442,8 @@ final class IndexReader(
     * `log` (boost · ln(scaling + f)). Matching stays lexical (the feature
     * only re-weights docs that match), scores combine additively exactly as
     * ES folds a should-clause. Shape: the full scored set (pruned scans +
-    * one combinable fold) joins the caller's feature frame once, then one
-    * top-k window — the rescore shape, not a second index.
+    * one combinable fold) joins the caller's feature frame once, then
+    * TakeOrdered(k) — the rescore shape, not a second index.
     *
     * @return (conv_id, score) rows, score desc then conv asc.
     */
@@ -3544,15 +3461,10 @@ final class IndexReader(
     }
     // left join: a matching doc with no feature row keeps its lexical score
     // (ES rank_feature contributes nothing when the feature is missing)
-    val scored = bm25ScoredAll(terms)
-      .join(meta.select(col(convCol).as("conv_id"),
-        col(featureCol).cast("double").as("__f")), Seq("conv_id"), "left")
-      .withColumn("score", col("score") + coalesce(featTerm, lit(0.0)))
-    val w = org.apache.spark.sql.expressions.Window
-      .orderBy(col("score").desc, col("conv_id").asc)
-    scored.withColumn("rn", row_number().over(w))
-      .where(col("rn") <= k)
-      .select("conv_id", "score")
+    joinValues(bm25ScoredAll(terms), meta, convCol, "left")(
+        col(featureCol).cast("double").as("__f"))
+      .select(col("conv_id"), (col("score") + coalesce(featTerm, lit(0.0))).as("score"))
+      .orderBy(col("score").desc, col("conv_id").asc).limit(k)
   }
 
   /** distance_feature query (the Elasticsearch `distance_feature` query on
@@ -3572,15 +3484,9 @@ final class IndexReader(
     require(pivotSecs > 0.0, "pivot must be > 0")
     val dist = abs(col("__ts").cast("double") - lit(origin).cast("double"))
     val featTerm = lit(boost) * lit(pivotSecs) / (lit(pivotSecs) + dist)
-    val scored = bm25ScoredAll(terms)
-      .join(meta.select(col(convCol).as("conv_id"), col(tsCol).as("__ts")),
-        Seq("conv_id"), "left")
-      .withColumn("score", col("score") + coalesce(featTerm, lit(0.0)))
-    val w = org.apache.spark.sql.expressions.Window
-      .orderBy(col("score").desc, col("conv_id").asc)
-    scored.withColumn("rn", row_number().over(w))
-      .where(col("rn") <= k)
-      .select("conv_id", "score")
+    joinValues(bm25ScoredAll(terms), meta, convCol, "left")(col(tsCol).as("__ts"))
+      .select(col("conv_id"), (col("score") + coalesce(featTerm, lit(0.0))).as("score"))
+      .orderBy(col("score").desc, col("conv_id").asc).limit(k)
   }
 
   /** The FULL scored match set — every qualifying document with its exact
@@ -3598,17 +3504,16 @@ final class IndexReader(
   def bm25ScoredAll(termsIn: Seq[String], conjunctive: Boolean = false,
       mustNot: Seq[String] = Nil, minShouldMatch: Int = 1,
       boosts: Map[String, Double] = Map.empty): DataFrame = {
-    require(boosts.values.forall(_ > 0.0), "boosts must be > 0")
-    val terms = termsIn.filter(t => t != null && t.nonEmpty).distinct
-    val ex = mustNot.filter(t => t != null && t.nonEmpty).distinct
-    if (terms.isEmpty || manifest.isEmpty) return emptyHits
-    if (!conjunctive && minShouldMatch > terms.length) return emptyHits
-    val m = manifest.get
-    if (m.numDocs == 0 || m.avgdl <= 0.0) return emptyHits
-    val k1 = conf.k1; val b = conf.b; val avgdl = m.avgdl; val n = m.numDocs
-    val nTerms = terms.length
-    val boostMap = boosts // stable reference for the closure
-    val contribs = terms.map(postingBlocks).reduce(_ union _)
+    // the full set has no k: Int.MaxValue passes the k rule
+    val q = Bm25Query.of(manifest, termsIn, Int.MaxValue, conjunctive, mustNot,
+      minShouldMatch, boosts) match {
+      case Some(q) => q
+      case None => return emptyHits
+    }
+    val k1 = conf.k1; val b = conf.b; val avgdl = q.avgdl; val n = q.n
+    val nTerms = q.terms.length
+    val boostMap = q.boosts // stable reference for the closure
+    val contribs = q.terms.map(postingBlocks).reduce(_ union _)
       .flatMap { blk =>
         val w = Bm25.weight(n, blk.df, k1) * boostMap.getOrElse(blk.term, 1.0)
         val docs = Delta.decode(blk.docsBin, blk.n)
@@ -3624,19 +3529,19 @@ final class IndexReader(
     // minimum_should_match is the same count under ≥ m (ES m-of-n semantics,
     // identical to the kernel's admission rule)
     val grouped =
-      if (conjunctive)
+      if (q.conjunctive)
         contribs.groupBy("docId")
           .agg(sum(col("c")).as("score"), count(lit(1)).as("__nt"))
           .where(col("__nt") === nTerms).drop("__nt")
-      else if (minShouldMatch > 1)
+      else if (q.minMatch > 1)
         contribs.groupBy("docId")
           .agg(sum(col("c")).as("score"), count(lit(1)).as("__nt"))
-          .where(col("__nt") >= minShouldMatch).drop("__nt")
+          .where(col("__nt") >= q.minMatch).drop("__nt")
       else contribs.groupBy("docId").agg(sum(col("c")).as("score"))
     val kept =
-      if (ex.isEmpty) grouped
+      if (q.mustNot.isEmpty) grouped
       else {
-        val exDocs = ex.map(postingBlocks).reduce(_ union _)
+        val exDocs = q.mustNot.map(postingBlocks).reduce(_ union _)
           .flatMap(blk => Delta.decode(blk.docsBin, blk.n))
           .toDF("docId").distinct()
         grouped.join(exDocs, Seq("docId"), "left_anti")
@@ -3657,7 +3562,7 @@ final class IndexReader(
     * driver materialization.
     */
   def termTf(termsIn: Seq[String]): DataFrame = {
-    val terms = termsIn.filter(t => t != null && t.nonEmpty).distinct
+    val terms = cleanTerms(termsIn)
     if (terms.isEmpty || manifest.isEmpty)
       return Seq.empty[(String, String, Long)].toDF("conv_id", "term", "tf")
     val rows = terms.map(postingBlocks).reduce(_ union _)
@@ -3684,7 +3589,7 @@ final class IndexReader(
     */
   private def lmTopK(termsIn: Seq[String], k: Int)(
       contrib: (Column, Column, Column) => Column): DataFrame = {
-    val terms = termsIn.filter(t => t != null && t.nonEmpty).distinct
+    val terms = cleanTerms(termsIn)
     if (terms.isEmpty || k <= 0 || manifest.isEmpty) return emptyHits
     val m = manifest.get
     if (m.numDocs == 0 || m.totalTokens == 0) return emptyHits
@@ -3929,12 +3834,10 @@ final class IndexReader(
       .filter { case (_, _, df) => df * 100L <= n * maxDfPct.toLong }
       .sortBy { case (t, tf, df) => (-tf, df, t) }
       .take(maxTerms).map(_._1).toSeq
-    if (selected.isEmpty) return emptyHits
     // top-(k+1) then drop self: exact, since removing one element of the
     // top-(k+1) leaves at least the true top-k-excluding-self
-    val rows = topKRowsImpl(selected, Nil, k + 1, conjunctive = false, m)
-      .filterNot(_._1 == convId).take(k)
-    hitsDf(rows)
+    Bm25Query.of(manifest, selected, k + 1).fold(emptyHits)(q =>
+      hitsDf(topKRowsImpl(q, m).filterNot(_._1 == convId).take(k)))
   }
 
   /** Pseudo-relevance feedback top-k (the Rocchio / RM-style two-pass
@@ -3958,13 +3861,14 @@ final class IndexReader(
       beta: Double, maxDfPct: Int = 50): DataFrame = {
     require(fbDocs >= 1 && fbTerms >= 0 && beta > 0.0,
       "fbDocs >= 1, fbTerms >= 0, beta > 0")
-    val terms = termsIn.filter(t => t != null && t.nonEmpty).distinct
-    if (terms.isEmpty || k <= 0 || manifest.isEmpty) return emptyHits
+    val q = Bm25Query.of(manifest, termsIn, k) match {
+      case Some(q) => q
+      case None => return emptyHits
+    }
     val m = manifest.get
-    if (m.numDocs == 0 || m.avgdl <= 0.0) return emptyHits
-    val fb = topKRowsImpl(terms, Nil, fbDocs, conjunctive = false, m).map(_._1)
-    if (fb.isEmpty || fbTerms == 0)
-      return hitsDf(topKRowsImpl(terms, Nil, k, conjunctive = false, m))
+    val terms = q.terms
+    val fb = topKRowsImpl(q.withK(fbDocs), m).map(_._1)
+    if (fb.isEmpty || fbTerms == 0) return hitsDf(topKRowsImpl(q, m))
     val fbIds = docsView.where(col("convId").isin(fb: _*))
       .select("docId").collect().map(_.getLong(0))
     // summed term vectors of the feedback docs (forward log, like MLT)
@@ -3973,8 +3877,7 @@ final class IndexReader(
       .where(!col("term").isin(terms: _*))
       .groupBy("term").agg(sum(col("tf")).as("stf"))
       .collect().map(r => r.getString(0) -> r.getLong(1))
-    if (cand.isEmpty)
-      return hitsDf(topKRowsImpl(terms, Nil, k, conjunctive = false, m))
+    if (cand.isEmpty) return hitsDf(topKRowsImpl(q, m))
     val paths = termBucketPaths(cand.map(_._1).toSeq)
     val dfMap: Map[String, Long] =
       if (paths.isEmpty) Map.empty
@@ -3987,9 +3890,8 @@ final class IndexReader(
       .filter { case (_, _, df) => df * 100L <= m.numDocs * maxDfPct.toLong }
       .sortBy { case (t, stf, df) => (-stf, df, t) }
       .take(fbTerms).map(_._1).toSeq
-    val boosts = expansion.map(_ -> beta).toMap
-    hitsDf(topKRowsImpl(terms ++ expansion, Nil, k, conjunctive = false, m,
-      boosts = boosts))
+    Bm25Query.of(manifest, terms ++ expansion, k, boosts = expansion.map(_ -> beta).toMap)
+      .fold(emptyHits)(qe => hitsDf(topKRowsImpl(qe, m)))
   }
 
   /** Score explanation (the Elasticsearch `_explain` API): the exact
@@ -4004,7 +3906,7 @@ final class IndexReader(
   def bm25Explain(convId: String, termsIn: Seq[String]): DataFrame = {
     val empty = Seq.empty[(String, Long, Long, Long, Double, Double)]
       .toDF("term", "tf", "dl", "df", "idf", "contrib")
-    val terms = termsIn.filter(t => t != null && t.nonEmpty).distinct
+    val terms = cleanTerms(termsIn)
     if (convId == null || convId.isEmpty || terms.isEmpty || manifest.isEmpty)
       return empty
     val m = manifest.get
@@ -4051,19 +3953,8 @@ final class IndexReader(
     * the distributed candidate pipeline resolved by [[finishRows]]. Both
     * public top-k surfaces ([[bm25TopK]], [[bm25TopKRows]]) are this.
     */
-  private def topKRowsImpl(terms: Seq[String], ex: Seq[String], k: Int,
-      conjunctive: Boolean, m: Manifest,
-      after: Option[(Double, Long)] = None,
-      include: Option[Dataset[PostingBlock]] = None,
-      minMatch: Int = 1,
-      boosts: Map[String, Double] = Map.empty,
-      stats: Option[CorpusStats] = None,
-      floor: Double = Double.NegativeInfinity): Array[(String, Double)] =
-    localTopK(terms, ex, k, conjunctive, m, after, include, minMatch, boosts,
-      stats, floor)
-      .getOrElse(finishRows(
-        scoredCandidates(terms, ex, k, conjunctive, m, after, include, minMatch,
-          boosts, stats, floor), k))
+  private def topKRowsImpl(q: Bm25Query, m: Manifest): Array[(String, Double)] =
+    localTopK(q, m).getOrElse(finishRows(scoredCandidates(q, m), q.k))
 
   private def hitsDf(rows: Array[(String, Double)]): DataFrame =
     if (rows.isEmpty) emptyHits else rows.toSeq.toDF("conv_id", "score")
@@ -4102,20 +3993,13 @@ final class IndexReader(
     * column-pruned block COUNT — one metadata-weight job, zero payload
     * bytes driver-side (ADVICE r3, medium).
     */
-  private[killa] def localTopK(
-      terms: Seq[String], mustNot: Seq[String], k: Int, conjunctive: Boolean,
-      m: Manifest, after: Option[(Double, Long)] = None,
-      include: Option[Dataset[PostingBlock]] = None,
-      minMatch: Int = 1,
-      boosts: Map[String, Double] = Map.empty,
-      stats: Option[CorpusStats] = None,
-      floor: Double = Double.NegativeInfinity): Option[Array[(String, Double)]] = {
-    val (afterScore, afterDoc) = after.getOrElse((Double.PositiveInfinity, Long.MinValue))
+  private[killa] def localTopK(q: Bm25Query, m: Manifest): Option[Array[(String, Double)]] = {
+    val (afterScore, afterDoc) = q.after
     val cap = conf.localQueryBlocks
     if (cap <= 0) return None
     // exclusion terms ride the same probe: a hot mustNot term ("NOT the")
     // pushes the query to the distributed path just like a hot query term
-    val all = terms ++ mustNot
+    val all = q.terms ++ q.mustNot
     val cachedArr: Array[Array[PostingBlock]] = all.map(blockCache.get(_)).toArray
     val missingIdx = cachedArr.indices.filter(cachedArr(_) == null)
     if (missingIdx.nonEmpty) {
@@ -4156,7 +4040,7 @@ final class IndexReader(
     // for the driver routes the query exactly like a beyond-cap term, with
     // the terms' just-fetched blocks already cached for the fan-out's reuse.
     // limit(cap+1) bounds the fetch: within-cap filters arrive whole here.
-    val incArr: Array[Array[PostingBlock]] = include match {
+    val incArr: Array[Array[PostingBlock]] = q.include match {
       case None => Array.empty
       case Some(ds) =>
         val bs = ds.limit(cap + 1).collect()
@@ -4164,30 +4048,21 @@ final class IndexReader(
         Array(bs.sortBy(_.firstDoc))
     }
     val blocks = cachedArr
-    val termBlocks = blocks.take(terms.length)
-    val exBlocks = blocks.drop(terms.length)
-    // boosts fold into the premultiplied weight — every bound scales with it.
-    // Under a stats override (sharded dfs_query_then_fetch) the MERGED
-    // corpus's N / df / avgdl replace this root's own — weights scale every
-    // block-max bound with them, so pruning stays exact under either.
-    val nEff = stats.map(_.numDocs).getOrElse(m.numDocs)
-    val avgdlEff = stats.map(_.avgdl).getOrElse(m.avgdl)
-    val weights = termBlocks.zipWithIndex.map { case (bs, i) =>
-      if (bs.isEmpty) 0.0
-      else Bm25.weight(nEff,
-        stats.map(_.df.getOrElse(terms(i), 0L)).getOrElse(bs(0).df),
-        conf.k1) * boosts.getOrElse(terms(i), 1.0)
-    }
+    val termBlocks = blocks.take(q.terms.length)
+    val exBlocks = blocks.drop(q.terms.length)
+    val weights = q.weigher(conf.k1)(termBlocks)
+    // (lo, hi] — the fan-out's convention
+    def scoreRange(lo: Long, hi: Long): Array[(Long, Double)] =
+      Daat.scoreRange(termBlocks, weights, lo, hi, q.k, q.conjunctive,
+        conf.k1, conf.b, q.avgdl, exBlocks, afterScore, afterDoc, incArr,
+        q.minMatch, q.floor).toArray
     // mid-size queries: the SAME docId-range decomposition as the
     // distributed kernel, on driver threads — identical results (per-range
     // DAAT + global tie-broken merge), none of the fan-out's shuffle/stage
     // latency. Small queries stay single-range (thread startup > win).
     val totalBlocks = blocks.foldLeft(0)(_ + _.length) + incArr.foldLeft(0)(_ + _.length)
     val hits: Array[(Long, Double)] =
-      if (totalBlocks <= conf.localParBlocks)
-        Daat.scoreRange(termBlocks, weights, -1L, Long.MaxValue, k,
-          conjunctive, conf.k1, conf.b, avgdlEff, exBlocks, afterScore, afterDoc,
-          incArr, minMatch, floor).toArray
+      if (totalBlocks <= conf.localParBlocks) scoreRange(-1L, Long.MaxValue)
       else {
         // shared bounded daemon pool, not per-query threads: under
         // concurrent serving load per-query `new Thread` churned up to 32
@@ -4205,61 +4080,47 @@ final class IndexReader(
         val pool = DaatPool.pool
         val futures = (0 until nRanges).map { r =>
           pool.submit(new java.util.concurrent.Callable[Array[(Long, Double)]] {
-            def call(): Array[(Long, Double)] = {
-              val lo = r.toLong * stride - 1 // (lo, hi] — the fan-out's convention
-              val hi = r.toLong * stride + stride - 1
-              Daat.scoreRange(termBlocks, weights, lo, hi, k,
-                conjunctive, conf.k1, conf.b, avgdlEff, exBlocks,
-                afterScore, afterDoc, incArr, minMatch, floor).toArray
-            }
+            def call(): Array[(Long, Double)] =
+              scoreRange(r.toLong * stride - 1, r.toLong * stride + stride - 1)
           })
         }
         futures.flatMap(_.get()).toArray
       }
-    Some(labelRows(hits, k))
+    Some(labelRows(hits, q.k))
   }
 
   /** The distributed candidate pipeline: pruned per-term block scans →
     * docId-range fan-out → per-range DAAT (package-private so plan tests can
     * assert its physical shape).
     */
-  private[killa] def scoredCandidates(
-      terms: Seq[String], mustNot: Seq[String], k: Int, conjunctive: Boolean,
-      m: Manifest, after: Option[(Double, Long)] = None,
-      include: Option[Dataset[PostingBlock]] = None,
-      minMatch: Int = 1,
-      boosts: Map[String, Double] = Map.empty,
-      stats: Option[CorpusStats] = None,
-      floor: Double = Double.NegativeInfinity): DataFrame = {
-    val (afterScore, afterDoc) = after.getOrElse((Double.PositiveInfinity, Long.MinValue))
+  private[killa] def scoredCandidates(q: Bm25Query, m: Manifest): DataFrame = {
     // exclusion terms tag on after the query terms, and the (optional)
     // doc-values filter's encoded blocks after those; all replicate to
     // ranges through the same fan-out and each range's kernel splits the
     // three segments back off by tag index
-    val all = terms ++ mustNot
-    val hasInclude = include.isDefined
+    val all = q.terms ++ q.mustNot
+    val hasInclude = q.include.isDefined
     val blocksByTerm: Seq[(Int, Dataset[PostingBlock])] =
       all.zipWithIndex.map { case (t, i) => (i, postingBlocks(t)) }
     val allBlocks: Dataset[(Int, PostingBlock)] = (blocksByTerm
       .map { case (i, ds) => ds.map(b => (i, b)) } ++
-      include.map(ds => ds.map(b => (all.length, b))).toSeq)
+      q.include.map(ds => ds.map(b => (all.length, b))).toSeq)
       .reduce(_ union _)
 
+    // the executor closure below captures these plain values, never `q`
+    // (its include set is a Dataset)
     val k1 = conf.k1; val b = conf.b
-    // stats override (sharded dfs_query_then_fetch): merged N / avgdl / df
-    // replace this root's; dfOv ships term-slot-aligned in the closure
-    val avgdl = stats.map(_.avgdl).getOrElse(m.avgdl)
-    val n = stats.map(_.numDocs).getOrElse(m.numDocs)
-    val dfOv: Option[Array[Long]] =
-      stats.map(s => terms.map(t => s.df.getOrElse(t, 0L)).toArray)
+    val (afterScore, afterDoc) = q.after
+    val (k, conjunctive, minMatch, floor, avgdl) =
+      (q.k, q.conjunctive, q.minMatch, q.floor, q.avgdl)
+    val weigh = q.weigher(k1)
 
     // docId ranges: fixed stride over the dense id domain. Each block goes to
     // every range it overlaps; each doc is scored only in its owning range.
     val nRanges = math.max(1, math.min(spark.sparkContext.defaultParallelism, 64))
     val stride = math.max(1L, (m.maxDocId + 2) / nRanges + 1)
-    val nTerms = terms.length
+    val nTerms = q.terms.length
     val nAll = all.length
-    val boostArr = terms.map(t => boosts.getOrElse(t, 1.0)).toArray
     val scored = allBlocks
       .flatMap { case (ti, blk) =>
         val r0 = blk.firstDoc / stride
@@ -4280,17 +4141,11 @@ final class IndexReader(
         // term and stored in every block) — saves a whole driver round-trip;
         // a term with no blocks in this range contributes nothing here, and
         // in conjunctive mode correctly empties the range's intersection.
-        // boostArr ships in the closure indexed by slot — same fold order as
-        // the driver-local path, so scores stay bit-identical across paths.
-        val weights = termBlocks.zipWithIndex.map { case (bs, i) =>
-          if (bs.isEmpty) 0.0
-          else Bm25.weight(n, dfOv.map(_(i)).getOrElse(bs(0).df), k1) * boostArr(i)
-        }
         val lo = rangeId * stride - 1 // (lo, hi] convention
         val hi = rangeId * stride + stride - 1
-        Daat.scoreRange(termBlocks, weights, lo, hi, k, conjunctive, k1, b, avgdl,
-          blocks.slice(nTerms, nAll), afterScore, afterDoc, blocks.drop(nAll),
-          minMatch, floor)
+        Daat.scoreRange(termBlocks, weigh(termBlocks), lo, hi, k, conjunctive,
+          k1, b, avgdl, blocks.slice(nTerms, nAll), afterScore, afterDoc,
+          blocks.drop(nAll), minMatch, floor)
       }
       .toDF("docId", "score")
     scored
@@ -4369,6 +4224,85 @@ final class IndexReader(
       .toArray
       .sortBy { case (conv, score) => (-score, conv) }
       .take(k)
+}
+
+/** A BM25 top-k request after every edge rule has run — the only input the
+  * exact top-k kernel accepts. Only [[Bm25Query.of]] builds one, so the rules
+  * live in one place and the kernel never sees raw terms.
+  *
+  * `n` / `avgdl` are the statistics the weights use: the stats override's
+  * (sharded dfs_query_then_fetch) when there is one, else the snapshot's.
+  * `after` is the (score, docId) search-after cursor; the default admits
+  * every document. `include` holds a doc-values filter's encoded blocks.
+  */
+private[killa] final class Bm25Query private (
+    val terms: Seq[String], val mustNot: Seq[String], val k: Int,
+    val conjunctive: Boolean, val minMatch: Int,
+    val boosts: Map[String, Double], val stats: Option[CorpusStats],
+    val floor: Double, val n: Long, val avgdl: Double,
+    val after: (Double, Long), val include: Option[Dataset[PostingBlock]]) {
+
+  private def copy(k: Int = k, after: (Double, Long) = after,
+      include: Option[Dataset[PostingBlock]] = include): Bm25Query =
+    new Bm25Query(terms, mustNot, k, conjunctive, minMatch, boosts, stats,
+      floor, n, avgdl, after, include)
+
+  def withK(k: Int): Bm25Query = copy(k = k)
+  def withAfter(score: Double, docId: Long): Bm25Query = copy(after = (score, docId))
+  def withInclude(blocks: Dataset[PostingBlock]): Bm25Query = copy(include = Some(blocks))
+
+  /** Per-term BM25 weights from each term's blocks. df is global and stamped
+    * into every block unless the stats override supplies it; the boost folds
+    * into the premultiplied weight, so every block-max bound scales with it
+    * and pruning stays exact; a term with no blocks weighs 0. The function
+    * closes over plain values only, so it ships in executor closures, and the
+    * local and distributed kernels get bit-identical weights from it.
+    */
+  def weigher(k1: Double): Array[Array[PostingBlock]] => Array[Double] = {
+    val nEff = n
+    val dfOv = stats.map(s => terms.map(t => s.df.getOrElse(t, 0L)).toArray)
+    val boost = terms.map(t => boosts.getOrElse(t, 1.0)).toArray
+    termBlocks => termBlocks.zipWithIndex.map { case (bs, i) =>
+      if (bs.isEmpty) 0.0
+      else Bm25.weight(nEff, dfOv.fold(bs(0).df)(_(i)), k1) * boost(i)
+    }
+  }
+}
+
+private[killa] object Bm25Query {
+  /** Query terms as every surface reads them: null and empty dropped,
+    * duplicates collapsed set-style (the reference's token-set semantics).
+    */
+  def cleanTerms(terms: Seq[String]): Seq[String] =
+    terms.filter(t => t != null && t.nonEmpty).distinct
+
+  /** The edge rules every BM25 entry point shares, applied once:
+    *  - a boost ≤ 0 is rejected before any other rule: it would break the
+    *    block-max bound's admissibility (ES makes the same restriction);
+    *  - terms and mustNot are cleaned; a term both required and excluded
+    *    stays excluded (plain boolean: t AND NOT t = ∅);
+    *  - None — the query matches nothing — with no usable term, k ≤ 0, no
+    *    snapshot, a disjunctive minShouldMatch above the distinct term count
+    *    (ES m-of-n: m ≤ 1 is the plain disjunction, conjunctive mode ignores
+    *    m), or empty effective statistics (N = 0 or avgdl ≤ 0; under a stats
+    *    override those are the override's).
+    */
+  def of(manifest: Option[Manifest], termsIn: Seq[String], k: Int,
+      conjunctive: Boolean = false, mustNot: Seq[String] = Nil,
+      minShouldMatch: Int = 1, boosts: Map[String, Double] = Map.empty,
+      stats: Option[CorpusStats] = None,
+      floor: Double = Double.NegativeInfinity): Option[Bm25Query] = {
+    require(boosts.values.forall(_ > 0.0), "boosts must be > 0")
+    val terms = cleanTerms(termsIn)
+    val n = stats.map(_.numDocs).orElse(manifest.map(_.numDocs)).getOrElse(0L)
+    val avgdl = stats.map(_.avgdl).orElse(manifest.map(_.avgdl)).getOrElse(0.0)
+    if (terms.isEmpty || k <= 0 || manifest.isEmpty) None
+    else if (!conjunctive && minShouldMatch > terms.length) None
+    else if (n == 0 || avgdl <= 0.0) None
+    else Some(new Bm25Query(terms, cleanTerms(mustNot), k, conjunctive,
+      minShouldMatch, boosts, stats, floor, n, avgdl,
+      (Double.PositiveInfinity, Long.MinValue), None))
+  }
 }
 
 /** Shared bounded daemon pool for the parallel driver-side DAAT kernel —

@@ -3,7 +3,7 @@ package killa
 import org.scalatest.funsuite.AnyFunSuite
 
 import killa.build.IndexWriter
-import killa.query.IndexReader
+import killa.query.{Bm25Query, IndexReader}
 import killa.synth.Synth
 
 /** Physical-plan shape assertions: the plans must stay the plans we want at
@@ -25,6 +25,9 @@ class PlanSpec extends AnyFunSuite {
 
   private def planOf(df: org.apache.spark.sql.DataFrame): String =
     df.queryExecution.executedPlan.toString
+
+  private object AqePlans
+    extends org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
 
   test("term lookup pushes the equality filter into the parquet scan") {
     val r = new IndexReader(spark, root, conf)
@@ -51,7 +54,7 @@ class PlanSpec extends AnyFunSuite {
 
   test("top-k BM25 candidate pipeline: pruned per-term scans, payload decode executor-side") {
     val r = new IndexReader(spark, root, conf)
-    val df = r.scoredCandidates(Seq("the", "query"), Nil, 5, conjunctive = false, r.manifest.get)
+    val df = r.scoredCandidates(Bm25Query.of(r.manifest, Seq("the", "query"), 5).get, r.manifest.get)
     val plan = planOf(df)
     assert(plan.contains("EqualTo(term,the)") && plan.contains("EqualTo(term,query)"),
       s"per-term pushdown missing:\n$plan")
@@ -59,6 +62,27 @@ class PlanSpec extends AnyFunSuite {
       plan.contains("FlatMapGroups"), s"range DAAT stage missing:\n$plan")
     // the finish is a bounded driver merge of ≤ (k+ties)·ranges candidates
     // (TakeOrdered-equivalent); correctness pinned by rank-identity suites
+  }
+
+  test("sparseVector / rankFeature / distanceFeature pick top-k with TakeOrdered, not a global Window") {
+    import org.apache.spark.sql.functions.col
+    val r = new IndexReader(spark, root, conf)
+    val meta = Synth.transcripts(spark, 40, 4, seed = 3L).toDF().where(col("turn_idx") === 0)
+    val origin = new java.sql.Timestamp(1704067200000L)
+    Seq(
+      "sparseVector" -> r.sparseVector(Map("the" -> 1.0, "query" -> 2.0), 5),
+      "rankFeature" -> r.rankFeature(Seq("the", "query"), 5, meta, "conv_id", "turn_idx"),
+      "distanceFeature" -> r.distanceFeature(Seq("the", "query"), 5, meta, "conv_id", "ts",
+        origin, pivotSecs = 60.0)).foreach { case (name, df) =>
+      assert(df.collect().nonEmpty, s"$name: vacuous fixture")
+      // the executed tree through AQE's query stages; a cached relation's
+      // own plan (the dictionary's per-docId last-wins window) is not part of it
+      val nodes = AqePlans.mapPlans(df.queryExecution.executedPlan)(_.nodeName)
+      // an unpartitioned Window pulls the whole scored match set into one
+      // partition; TakeOrderedAndProject keeps a bounded heap per partition
+      assert(nodes.contains("TakeOrderedAndProject") && !nodes.exists(_.startsWith("Window")),
+        s"$name must select its top k without a window:\n${planOf(df)}")
+    }
   }
 
   test("prefix search pushes StringStartsWith into the parquet scan and prunes payload columns") {
