@@ -128,10 +128,20 @@ final class IndexReader(
     docIds.join(docsView, "docId").select(col("convId").as("conv_id"))
   }
 
+  /** The given bucket dirs as one frame, each dir's frame from
+    * bucketDfCache (same as single-term membership): repeat multi-term
+    * queries must not re-list dirs and re-read parquet footers — the
+    * dominant repeat cost under load.
+    */
+  private def bucketFrames(paths: Seq[String]): DataFrame =
+    paths.map(p => bucketDfCache.computeIfAbsent(p,
+      path => spark.read.schema(blockSchema).parquet(path)))
+      .reduce(_ unionByName _)
+
   /** Multi-term OR membership (the ES synonym / terms-query shape): the set
     * of conversations containing ANY of the given terms — one scan pruned to
-    * exactly the terms' bucket dirs (term → bucket is a pure hash, the same
-    * path pruning phrase() and moreLikeThis use) with a pushed IN filter the
+    * exactly the terms' bucket dirs ([[termBucketPaths]], the same path
+    * pruning [[termDf]] uses) with a pushed IN filter the
     * sorted term column's row-group stats prune on; payload columns of
     * non-matching terms are never read, and the per-doc distinct runs before
     * the dictionary join so the label lookup sees each doc once.
@@ -142,13 +152,7 @@ final class IndexReader(
     if (terms.length == 1) return membership(terms.head)
     val paths = termBucketPaths(terms)
     if (paths.isEmpty) return emptyMembers
-    // per-bucket frames come from bucketDfCache (same as single-term
-    // membership): repeat synonym-set queries must not re-list dirs and
-    // re-read parquet footers — the dominant repeat cost under load
-    val docIds = paths
-      .map(p => bucketDfCache.computeIfAbsent(p,
-        path => spark.read.schema(blockSchema).parquet(path)))
-      .reduce(_ unionByName _)
+    val docIds = bucketFrames(paths)
       .where(col("term").isin(terms: _*))
       .select(col("n"), col("docsBin")).as[(Int, Array[Byte])]
       .flatMap { case (n, bin) => Delta.decode(bin, n) }
@@ -1797,15 +1801,76 @@ final class IndexReader(
       .limit(n)
   }
 
+  /** The one positional scan behind every phrase / span / interval kernel
+    * (the index IndexWriter.buildPositions writes and IndexMaintainer's
+    * positions step maintains). It scans ONLY the slot terms' position
+    * buckets ([[termPosPaths]]) with a pushed IN filter the sorted term
+    * column's row-group stats prune on, groups per candidate doc (each group
+    * ≤ |terms| position lists of ONE doc — bounded), and hands `hits` one
+    * sorted position list per slot: the union of the slot's terms' lists,
+    * empty when none of them occurs in the doc. The union stays strictly
+    * ascending after one merge-sort because one document position holds
+    * exactly one token, so distinct terms' lists are disjoint; a
+    * single-member slot passes its (already sorted) list through. `hits`
+    * returns the doc's hit count; docs at 0 drop. The closure captures
+    * plain values only, never the reader.
+    *
+    * @return (docId, hits) rows, or None when there is no snapshot or none
+    *         of the terms' position dirs exists.
+    * @throws IllegalStateException when the snapshot has no positional index.
+    */
+  private def positionalHits(slots: Seq[Seq[String]])(
+      hits: Array[Array[Long]] => Long): Option[DataFrame] = {
+    val m = manifest match {
+      case Some(m) => m
+      case None => return None
+    }
+    if (m.posBuckets.isEmpty)
+      throw new IllegalStateException(
+        "no positional index at this snapshot — run IndexWriter.buildPositions once")
+    val terms = slots.flatten.distinct
+    val paths = termPosPaths(terms)
+    if (paths.isEmpty) return None
+    val slotsV: Array[Array[String]] = slots.map(_.toArray).toArray
+    val posSchema = org.apache.spark.sql.Encoders.product[killa.model.PosRow].schema
+    Some(spark.read.schema(posSchema).parquet(paths: _*)
+      .where(col("term").isin(terms: _*))
+      .select("term", "docId", "np", "posBin")
+      .as[(String, Long, Int, Array[Byte])]
+      .groupByKey(_._2)
+      .flatMapGroups { (docId, it) =>
+        val byTerm = scala.collection.mutable.Map.empty[String, Array[Long]]
+        it.foreach { case (t, _, n, bin) => byTerm(t) = Delta.decode(bin, n) }
+        val lists: Array[Array[Long]] = slotsV.map { st =>
+          val ls = st.flatMap(byTerm.get)
+          if (ls.isEmpty) Array.emptyLongArray
+          else if (ls.length == 1) ls(0)
+          else {
+            val all = Array.concat(ls.toIndexedSeq: _*)
+            java.util.Arrays.sort(all); all
+          }
+        }
+        val n = hits(lists)
+        if (n > 0) Iterator.single((docId, n)) else Iterator.empty
+      }
+      .toDF("docId", "hits"))
+  }
+
+  /** [[positionalHits]] as a match set: the conv_ids of the docs whose slot
+    * position lists satisfy `matches`. The label join also filters dead
+    * docs (deletes never rewrite positions).
+    */
+  private def positionalMatch(slots: Seq[Seq[String]])(
+      matches: Array[Array[Long]] => Boolean): DataFrame =
+    positionalHits(slots)(lists => if (matches(lists)) 1L else 0L)
+      .fold(emptyMembers)(_.join(docsView, "docId").select(col("convId").as("conv_id")))
+
   /** Phrase search over the positional index (IndexWriter.buildPositions,
     * maintained incrementally by IndexMaintainer's positions step):
     * conversations containing the terms at consecutive global positions.
-    * Plan: scans ONLY the phrase terms' position buckets (bucket-level path
-    * pruning via manifest.posBuckets, then pushed IN filter + row-group
-    * stats on the sorted term column), a groupByKey per candidate doc (each
-    * group ≤ |phrase| position lists of ONE doc — bounded), executor-side
-    * merge-intersection of the sorted position lists, then the label join
-    * (which also filters dead docs — deletes never rewrite positions).
+    * Plan: the [[positionalHits]] scan (position buckets pruned to the
+    * phrase terms, one bounded group per candidate doc), an executor-side
+    * merge-intersection of the sorted position lists, then the label join.
     * Duplicate phrase terms are handled (each slot looks up its own term's
     * list).
     */
@@ -1855,100 +1920,48 @@ final class IndexReader(
   /** Span-first (the Elasticsearch `span_first` query): conversations whose
     * FIRST occurrence of `term` falls inside the document's leading `limit`
     * positions (document-global, 0-based — "mentioned in the opening").
-    * One pruned positional-bucket scan; position lists are delta-coded
-    * ascending, so element 0 IS the first occurrence.
+    * One [[positionalHits]] scan; position lists are delta-coded ascending,
+    * so element 0 IS the first occurrence.
     */
   def spanFirst(term: String, limit: Int): DataFrame = {
-    if (term == null || term.isEmpty || limit <= 0 || manifest.isEmpty)
-      return emptyMembers
-    val m = manifest.get
-    if (m.posBuckets.isEmpty)
-      throw new IllegalStateException(
-        "no positional index at this snapshot — run IndexWriter.buildPositions once" )
-    val posPaths = Seq(Hashing.termBucket(term, m.nBuckets))
-      .flatMap(m.posPath).filter(p => fs(p).exists(new Path(p)))
-    if (posPaths.isEmpty) return emptyMembers
+    if (term == null || term.isEmpty || limit <= 0) return emptyMembers
     val limitV = limit.toLong
-    val posSchema = org.apache.spark.sql.Encoders.product[killa.model.PosRow].schema
-    val matched = spark.read.schema(posSchema).parquet(posPaths: _*)
-      .where(col("term") === term)
-      .select("docId", "np", "posBin").as[(Long, Int, Array[Byte])]
-      .flatMap { case (docId, n, bin) =>
-        if (n > 0 && Delta.decode(bin, n)(0) < limitV) Iterator.single(docId)
-        else Iterator.empty
-      }
-      .toDF("docId").distinct()
-    matched.join(docsView, "docId").select(col("convId").as("conv_id"))
+    positionalMatch(Seq(Seq(term)))(lists => lists(0).nonEmpty && lists(0)(0) < limitV)
   }
 
   /** The generalized phrase kernel: slot i of the phrase matches ANY term of
     * `slotsIn(i)` (singleton slots ⇒ the plain phrase; a multi-term last
-    * slot ⇒ match_phrase_prefix). A slot's position list is the sorted union
-    * of its members' lists — sound because one document position holds
-    * exactly one token, so distinct terms' lists are disjoint and the union
-    * stays strictly ascending after one merge-sort.
+    * slot ⇒ match_phrase_prefix), its position list being the slot union
+    * [[positionalHits]] builds.
     */
   private def phraseSlots(slotsIn: Seq[Seq[String]], slop: Int): DataFrame = {
     val slots = slotsIn.map(cleanTerms)
-    if (slots.isEmpty || slots.exists(_.isEmpty) || manifest.isEmpty)
-      return emptyMembers
-    val m = manifest.get
-    if (m.posBuckets.isEmpty)
-      throw new IllegalStateException(
-        "no positional index at this snapshot — run IndexWriter.buildPositions once" )
-    val distinctTerms = slots.flatten.distinct
-    val posPaths = distinctTerms.map(t => Hashing.termBucket(t, m.nBuckets)).distinct
-      .flatMap(m.posPath).filter(p => fs(p).exists(new Path(p)))
-    if (posPaths.isEmpty) return emptyMembers
-    val slotsV: Array[Array[String]] = slots.map(_.toArray).toArray // closure capture
+    if (slots.isEmpty || slots.exists(_.isEmpty)) return emptyMembers
     val slopV = math.max(0, slop)
-    val posSchema = org.apache.spark.sql.Encoders.product[killa.model.PosRow].schema
-    val matched = spark.read.schema(posSchema).parquet(posPaths: _*)
-      .where(col("term").isin(distinctTerms: _*))
-      .select("term", "docId", "np", "posBin")
-      .as[(String, Long, Int, Array[Byte])]
-      .groupByKey(_._2)
-      .flatMapGroups { (docId, it) =>
-        val byTerm = scala.collection.mutable.Map.empty[String, Array[Long]]
-        it.foreach { case (t, _, n, bin) => byTerm(t) = Delta.decode(bin, n) }
-        // merged positions per slot (single-member slots pass through)
-        val slotPos: Array[Array[Long]] = slotsV.map { st =>
-          val lists = st.flatMap(byTerm.get)
-          if (lists.isEmpty) Array.empty[Long]
-          else if (lists.length == 1) lists(0)
-          else {
-            val all = Array.concat(lists.toIndexedSeq: _*)
-            java.util.Arrays.sort(all); all
-          }
+    positionalMatch(slots) { slotPos =>
+      // reachable-position chain: cand = positions of the current slot
+      // from which a valid chain of all previous slots ends. Position
+      // lists are sorted (encoder writes ascending), so one two-pointer
+      // pass per slot suffices: q matches iff some kept p satisfies
+      // q - 1 - slop ≤ p ≤ q - 1.
+      var cand = slotPos(0)
+      var i = 1
+      while (i < slotPos.length && cand.nonEmpty) {
+        val next = slotPos(i)
+        val out = Array.newBuilder[Long]
+        var a = 0
+        var bIdx = 0
+        while (bIdx < next.length) {
+          val q = next(bIdx)
+          while (a < cand.length && cand(a) < q - 1 - slopV) a += 1
+          if (a < cand.length && cand(a) <= q - 1) out += q
+          bIdx += 1
         }
-        if (slotPos.exists(_.isEmpty)) Iterator.empty
-        else {
-          // reachable-position chain: cand = positions of the current slot
-          // from which a valid chain of all previous slots ends. Position
-          // lists are sorted (encoder writes ascending), so one two-pointer
-          // pass per slot suffices: q matches iff some kept p satisfies
-          // q - 1 - slop ≤ p ≤ q - 1.
-          var cand = slotPos(0)
-          var i = 1
-          while (i < slotPos.length && cand.nonEmpty) {
-            val next = slotPos(i)
-            val out = Array.newBuilder[Long]
-            var a = 0
-            var bIdx = 0
-            while (bIdx < next.length) {
-              val q = next(bIdx)
-              while (a < cand.length && cand(a) < q - 1 - slopV) a += 1
-              if (a < cand.length && cand(a) <= q - 1) out += q
-              bIdx += 1
-            }
-            cand = out.result()
-            i += 1
-          }
-          if (cand.nonEmpty) Iterator.single(docId) else Iterator.empty
-        }
+        cand = out.result()
+        i += 1
       }
-      .toDF("docId")
-    matched.join(docsView, "docId").select(col("convId").as("conv_id"))
+      cand.nonEmpty
+    }
   }
 
   /** Span-near, unordered (the Elasticsearch/Lucene `span_near` query with
@@ -1956,75 +1969,23 @@ final class IndexReader(
     * one occurrence of EACH distinct term such that the covering window is
     * tight enough — `(max(p) − min(p) + 1) − |terms| ≤ slop`, Lucene's
     * unordered-span slack. Order-free: "agg … batch" matches where the
-    * ordered [[phrase]](slop) does not. Plan identical to [[phrase]] —
-    * pruned positional-bucket scan, one bounded group per candidate doc
-    * (≤ |terms| position lists of ONE doc) — with the classic
-    * minimal-covering-window k-pointer merge over the sorted per-term
-    * lists: advance the pointer holding the global minimum, so every
-    * locally-minimal window is visited once — O(Σ positions · |terms|)
-    * per doc, no materialized cross-product. Distinct terms occupy
-    * distinct document positions, so no same-position guard is needed.
+    * ordered [[phrase]](slop) does not. [[spanNearAny]] with one term per
+    * slot; one distinct term answers from membership.
     */
-  def spanNear(termsIn: Seq[String], slop: Int): DataFrame = {
-    val terms = cleanTerms(termsIn)
-    if (terms.isEmpty || manifest.isEmpty) return emptyMembers
-    if (terms.length == 1) return membership(terms.head)
-    val m = manifest.get
-    if (m.posBuckets.isEmpty)
-      throw new IllegalStateException(
-        "no positional index at this snapshot — run IndexWriter.buildPositions once")
-    val posPaths = terms.map(t => Hashing.termBucket(t, m.nBuckets)).distinct
-      .flatMap(m.posPath).filter(p => fs(p).exists(new Path(p)))
-    if (posPaths.isEmpty) return emptyMembers
-    val termsV: Array[String] = terms.toArray
-    val slack = math.max(0, slop).toLong
-    val posSchema = org.apache.spark.sql.Encoders.product[killa.model.PosRow].schema
-    val matched = spark.read.schema(posSchema).parquet(posPaths: _*)
-      .where(col("term").isin(terms: _*))
-      .select("term", "docId", "np", "posBin")
-      .as[(String, Long, Int, Array[Byte])]
-      .groupByKey(_._2)
-      .flatMapGroups { (docId, it) =>
-        val byTerm = scala.collection.mutable.Map.empty[String, Array[Long]]
-        it.foreach { case (t, _, n, bin) => byTerm(t) = Delta.decode(bin, n) }
-        val lists: Array[Array[Long]] =
-          termsV.map(t => byTerm.getOrElse(t, Array.empty[Long]))
-        if (lists.exists(_.isEmpty)) Iterator.empty
-        else {
-          val k = lists.length
-          val idx = new Array[Int](k)
-          var hit = false
-          var exhausted = false
-          while (!hit && !exhausted) {
-            var mn = Long.MaxValue; var mx = Long.MinValue; var mnAt = -1
-            var j = 0
-            while (j < k) {
-              val v = lists(j)(idx(j))
-              if (v < mn) { mn = v; mnAt = j }
-              if (v > mx) mx = v
-              j += 1
-            }
-            if (mx - mn + 1L - k <= slack) hit = true
-            else {
-              idx(mnAt) += 1
-              if (idx(mnAt) >= lists(mnAt).length) exhausted = true
-            }
-          }
-          if (hit) Iterator.single(docId) else Iterator.empty
-        }
-      }
-      .toDF("docId")
-    matched.join(docsView, "docId").select(col("convId").as("conv_id"))
-  }
+  def spanNear(termsIn: Seq[String], slop: Int): DataFrame =
+    spanNearAny(cleanTerms(termsIn).map(Seq(_)), slop)
 
   /** span_near over span_or clauses (the Elasticsearch `span_or` wrapped in
     * `span_near`): each slot is an OR of alternative terms, and a slot's
     * span position list is the sorted UNION of its alternatives' positions —
-    * the one extra rule span_or adds. Same proximity semantics as
-    * [[spanNear]] (any order, max − min + 1 − n ≤ slop over one position per
-    * slot), same scale shape: position scans pruned to the slots' terms'
-    * buckets, per-doc grouping, a bounded multi-pointer walk (O(Σ positions)
-    * per doc). A single-alternative slot degenerates to plain span_near.
+    * the one extra rule span_or adds. Proximity is unordered: one position
+    * per slot with max − min + 1 − n ≤ slop. Plan: the [[positionalHits]]
+    * scan, then the classic minimal-covering-window k-pointer merge over the
+    * sorted per-slot lists: advance the pointer holding the global minimum,
+    * so every locally-minimal window is visited once — O(Σ positions · n)
+    * per doc, no materialized cross-product. Distinct terms occupy distinct
+    * document positions, so no same-position guard is needed. A single slot
+    * is union membership of its alternatives.
     *
     * @param slots one Seq of alternative terms per span position.
     * @return distinct matching conv_ids.
@@ -2033,65 +1994,30 @@ final class IndexReader(
     val cleaned = slots.map(cleanTerms)
       .filter(_.nonEmpty)
     if (cleaned.isEmpty || manifest.isEmpty) return emptyMembers
-    if (cleaned.length == 1) {
-      // one slot: span_or alone = union membership of the alternatives
-      return cleaned.head.map(membership).reduce(_ unionByName _)
-        .distinct()
-    }
-    val m = manifest.get
-    if (m.posBuckets.isEmpty)
-      throw new IllegalStateException(
-        "no positional index at this snapshot — run IndexWriter.buildPositions once")
-    val allTerms = cleaned.flatten.distinct
-    val posPaths = allTerms.map(t => Hashing.termBucket(t, m.nBuckets)).distinct
-      .flatMap(m.posPath).filter(p => fs(p).exists(new Path(p)))
-    if (posPaths.isEmpty) return emptyMembers
-    val slotsV: Array[Array[String]] = cleaned.map(_.toArray).toArray
+    if (cleaned.length == 1) return membershipAny(cleaned.head)
     val slack = math.max(0, slop).toLong
-    val posSchema = org.apache.spark.sql.Encoders.product[killa.model.PosRow].schema
-    val matched = spark.read.schema(posSchema).parquet(posPaths: _*)
-      .where(col("term").isin(allTerms: _*))
-      .select("term", "docId", "np", "posBin")
-      .as[(String, Long, Int, Array[Byte])]
-      .groupByKey(_._2)
-      .flatMapGroups { (docId, it) =>
-        val byTerm = scala.collection.mutable.Map.empty[String, Array[Long]]
-        it.foreach { case (t, _, n, bin) => byTerm(t) = Delta.decode(bin, n) }
-        // a slot's position list = sorted union of its live alternatives'
-        // (per-term lists are sorted and positions are distinct per term)
-        val lists: Array[Array[Long]] = slotsV.map { alts =>
-          val merged = alts.iterator
-            .flatMap(t => byTerm.getOrElse(t, Array.empty[Long]).iterator)
-            .toArray
-          java.util.Arrays.sort(merged)
-          merged
+    positionalMatch(cleaned) { lists =>
+      val k = lists.length
+      val idx = new Array[Int](k)
+      var hit = false
+      var exhausted = lists.exists(_.isEmpty)
+      while (!hit && !exhausted) {
+        var mn = Long.MaxValue; var mx = Long.MinValue; var mnAt = -1
+        var j = 0
+        while (j < k) {
+          val v = lists(j)(idx(j))
+          if (v < mn) { mn = v; mnAt = j }
+          if (v > mx) mx = v
+          j += 1
         }
-        if (lists.exists(_.isEmpty)) Iterator.empty
+        if (mx - mn + 1L - k <= slack) hit = true
         else {
-          val k = lists.length
-          val idx = new Array[Int](k)
-          var hit = false
-          var exhausted = false
-          while (!hit && !exhausted) {
-            var mn = Long.MaxValue; var mx = Long.MinValue; var mnAt = -1
-            var j = 0
-            while (j < k) {
-              val v = lists(j)(idx(j))
-              if (v < mn) { mn = v; mnAt = j }
-              if (v > mx) mx = v
-              j += 1
-            }
-            if (mx - mn + 1L - k <= slack) hit = true
-            else {
-              idx(mnAt) += 1
-              if (idx(mnAt) >= lists(mnAt).length) exhausted = true
-            }
-          }
-          if (hit) Iterator.single(docId) else Iterator.empty
+          idx(mnAt) += 1
+          if (idx(mnAt) >= lists(mnAt).length) exhausted = true
         }
       }
-      .toDF("docId")
-    matched.join(docsView, "docId").select(col("convId").as("conv_id"))
+      hit
+    }
   }
 
   /** Ordered intervals query (the Elasticsearch `intervals` query, `match`
@@ -2113,52 +2039,28 @@ final class IndexReader(
     val terms = termsIn.filter(t => t != null && t.nonEmpty)
     if (terms.isEmpty || manifest.isEmpty) return emptyMembers
     if (terms.length == 1) return membership(terms.head)
-    val m = manifest.get
-    if (m.posBuckets.isEmpty)
-      throw new IllegalStateException(
-        "no positional index at this snapshot — run IndexWriter.buildPositions once")
-    val uniq = terms.distinct
-    val posPaths = uniq.map(t => Hashing.termBucket(t, m.nBuckets)).distinct
-      .flatMap(m.posPath).filter(p => fs(p).exists(new Path(p)))
-    if (posPaths.isEmpty) return emptyMembers
-    val termsV: Array[String] = terms.toArray
     val slack = math.max(0, maxGaps).toLong
-    val posSchema = org.apache.spark.sql.Encoders.product[killa.model.PosRow].schema
-    val matched = spark.read.schema(posSchema).parquet(posPaths: _*)
-      .where(col("term").isin(uniq: _*))
-      .select("term", "docId", "np", "posBin")
-      .as[(String, Long, Int, Array[Byte])]
-      .groupByKey(_._2)
-      .flatMapGroups { (docId, it) =>
-        val byTerm = scala.collection.mutable.Map.empty[String, Array[Long]]
-        it.foreach { case (t, _, n, bin) => byTerm(t) = Delta.decode(bin, n) }
-        val lists: Array[Array[Long]] =
-          termsV.map(t => byTerm.getOrElse(t, Array.empty[Long]))
-        if (lists.exists(_.isEmpty)) Iterator.empty
-        else {
-          val n = lists.length
-          val ptr = new Array[Int](n) // forward-only successor cursors
-          var hit = false
-          var i1 = 0
-          while (!hit && i1 < lists(0).length) {
-            var prev = lists(0)(i1)
-            var ok = true
-            var j = 1
-            while (ok && j < n) {
-              val lj = lists(j)
-              while (ptr(j) < lj.length && lj(ptr(j)) <= prev) ptr(j) += 1
-              if (ptr(j) >= lj.length) ok = false
-              else { prev = lj(ptr(j)); j += 1 }
-            }
-            if (!ok) i1 = lists(0).length // a slot exhausted: no later p₁ helps
-            else if (prev - lists(0)(i1) + 1L - n <= slack) hit = true
-            else i1 += 1
-          }
-          if (hit) Iterator.single(docId) else Iterator.empty
+    positionalMatch(terms.map(Seq(_))) { lists =>
+      val n = lists.length
+      val ptr = new Array[Int](n) // forward-only successor cursors
+      var hit = false
+      var i1 = 0
+      while (!hit && i1 < lists(0).length) {
+        var prev = lists(0)(i1)
+        var ok = true
+        var j = 1
+        while (ok && j < n) {
+          val lj = lists(j)
+          while (ptr(j) < lj.length && lj(ptr(j)) <= prev) ptr(j) += 1
+          if (ptr(j) >= lj.length) ok = false
+          else { prev = lj(ptr(j)); j += 1 }
         }
+        if (!ok) i1 = lists(0).length // a slot exhausted: no later p₁ helps
+        else if (prev - lists(0)(i1) + 1L - n <= slack) hit = true
+        else i1 += 1
       }
-      .toDF("docId")
-    matched.join(docsView, "docId").select(col("convId").as("conv_id"))
+      hit
+    }
   }
 
   /** `any_of` intervals combinator (the Elasticsearch `intervals` query's
@@ -2453,54 +2355,28 @@ final class IndexReader(
     * lie within `pre` positions after — nor `post` positions before — any
     * occurrence of `exclude` (i.e. no exclude position in
     * `[p − pre, p + post]` around a surviving include position p). The
-    * "spark, but not in the phrase 'spark plug'" shape. Same bounded
-    * per-doc plan as [[phrase]]; inside each group a single two-pointer
-    * pass over the two sorted lists — the exclude cursor only ever moves
-    * forward because include positions ascend.
+    * "spark, but not in the phrase 'spark plug'" shape. One
+    * [[positionalHits]] scan; inside each group a single two-pointer pass
+    * over the two sorted lists — the exclude cursor only ever moves forward
+    * because include positions ascend. A doc without `exclude` keeps every
+    * include position.
     */
   def spanNot(include: String, exclude: String, pre: Int, post: Int): DataFrame = {
     if (include == null || include.isEmpty || manifest.isEmpty) return emptyMembers
     if (exclude == null || exclude.isEmpty) return membership(include)
     if (include == exclude) return emptyMembers // a span minus itself
-    val m = manifest.get
-    if (m.posBuckets.isEmpty)
-      throw new IllegalStateException(
-        "no positional index at this snapshot — run IndexWriter.buildPositions once")
-    val posPaths = Seq(include, exclude)
-      .map(t => Hashing.termBucket(t, m.nBuckets)).distinct
-      .flatMap(m.posPath).filter(p => fs(p).exists(new Path(p)))
-    if (posPaths.isEmpty) return emptyMembers
     val preV = math.max(0, pre).toLong
     val postV = math.max(0, post).toLong
-    val inc = include
-    val posSchema = org.apache.spark.sql.Encoders.product[killa.model.PosRow].schema
-    val matched = spark.read.schema(posSchema).parquet(posPaths: _*)
-      .where(col("term").isin(include, exclude))
-      .select("term", "docId", "np", "posBin")
-      .as[(String, Long, Int, Array[Byte])]
-      .groupByKey(_._2)
-      .flatMapGroups { (docId, it) =>
-        var a: Array[Long] = null
-        var b: Array[Long] = null
-        it.foreach { case (t, _, n, bin) =>
-          if (t == inc) a = Delta.decode(bin, n)
-          else b = Delta.decode(bin, n)
-        }
-        if (a == null) Iterator.empty
-        else if (b == null) Iterator.single(docId)
-        else {
-          var i = 0; var j = 0; var hit = false
-          while (!hit && i < a.length) {
-            val p = a(i)
-            while (j < b.length && b(j) < p - preV) j += 1
-            if (j >= b.length || b(j) > p + postV) hit = true
-            i += 1
-          }
-          if (hit) Iterator.single(docId) else Iterator.empty
-        }
+    positionalMatch(Seq(Seq(include), Seq(exclude))) { case Array(a, b) =>
+      var i = 0; var j = 0; var hit = false
+      while (!hit && i < a.length) {
+        val p = a(i)
+        while (j < b.length && b(j) < p - preV) j += 1
+        if (j >= b.length || b(j) > p + postV) hit = true
+        i += 1
       }
-      .toDF("docId")
-    matched.join(docsView, "docId").select(col("convId").as("conv_id"))
+      hit
+    }
   }
 
   /** Match-bool-prefix (the Elasticsearch `match_bool_prefix` query): every
@@ -2548,8 +2424,8 @@ final class IndexReader(
     * replaced by its best edit-distance-≤ maxDist dictionary candidate,
     * ranked df desc then term asc ([[suggest]]'s exact rule); an absent
     * token with no candidate survives unchanged with df 0. Driver cost is
-    * bounded by the query length: ONE bucket-pruned (term, df) point scan
-    * for all input tokens, plus one [[suggest]] dictionary scan per
+    * bounded by the query length: ONE [[termDf]] scan for all input
+    * tokens, plus one [[suggest]] dictionary scan per
     * misspelled token (the edit-≤1 neighborhood of a term is
     * alphabet-bounded).
     *
@@ -2561,13 +2437,8 @@ final class IndexReader(
     val terms = termsIn.filter(t => t != null && t.nonEmpty)
     if (terms.isEmpty || manifest.isEmpty) return empty
     val distinct = terms.distinct
-    val paths = termBucketPaths(distinct)
-    val dfMap: Map[String, Long] =
-      if (paths.isEmpty) Map.empty
-      else spark.read.schema(blockSchema).parquet(paths: _*)
-        .where(col("term").isin(distinct: _*))
-        .groupBy("term").agg(max(col("df")).as("df"))
-        .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
+    // df 0 = absent from the dictionary: the token needs a correction
+    val dfMap = termDf(distinct).filter(_._2 > 0)
     val corrections: Map[String, (String, Long)] =
       distinct.filterNot(dfMap.contains).map { in =>
         val c = suggest(in, maxDist, 1).collect()
@@ -2586,8 +2457,7 @@ final class IndexReader(
     * `first` at p, `second` at q, p < q ≤ p + 1 + slop (the Lucene ordered
     * span_near window, endpoints inclusive). Returns, per matching doc, the
     * number of DISTINCT `little` positions lying inside at least one big
-    * span. Plan identical to [[phrase]]: pruned positional-bucket scan, one
-    * bounded group per candidate doc. Inside each group a single forward
+    * span. One [[positionalHits]] scan; inside each group a single forward
     * pass: for each p the widest valid span [p, qmax] dominates every
     * narrower one (any covered little position is covered by it), and both
     * p and qmax are non-decreasing across the loop, so one little-cursor
@@ -2597,49 +2467,26 @@ final class IndexReader(
   private def spanNestHits(first: String, second: String, slop: Int,
       little: String): DataFrame = {
     val empty = Seq.empty[(Long, Long)].toDF("docId", "hits")
-    if (Seq(first, second, little).exists(t => t == null || t.isEmpty) ||
-        manifest.isEmpty) return empty
-    val m = manifest.get
-    if (m.posBuckets.isEmpty)
-      throw new IllegalStateException(
-        "no positional index at this snapshot — run IndexWriter.buildPositions once")
-    val terms = Seq(first, second, little).distinct
-    val posPaths = terms.map(t => Hashing.termBucket(t, m.nBuckets)).distinct
-      .flatMap(m.posPath).filter(p => fs(p).exists(new Path(p)))
-    if (posPaths.isEmpty) return empty
-    val (fT, sT, lT) = (first, second, little)
+    if (Seq(first, second, little).exists(t => t == null || t.isEmpty)) return empty
     val slopV = math.max(0, slop).toLong
-    val posSchema = org.apache.spark.sql.Encoders.product[killa.model.PosRow].schema
-    spark.read.schema(posSchema).parquet(posPaths: _*)
-      .where(col("term").isin(terms: _*))
-      .select("term", "docId", "np", "posBin")
-      .as[(String, Long, Int, Array[Byte])]
-      .groupByKey(_._2)
-      .flatMapGroups { (docId, it) =>
-        val byTerm = scala.collection.mutable.Map.empty[String, Array[Long]]
-        it.foreach { case (t, _, n, bin) => byTerm(t) = Delta.decode(bin, n) }
-        (byTerm.get(fT), byTerm.get(sT), byTerm.get(lT)) match {
-          case (Some(a), Some(b), Some(l)) =>
-            var hits = 0L
-            var bi = 0; var li = 0; var ai = 0
-            while (ai < a.length) {
-              val p = a(ai)
-              while (bi < b.length && b(bi) <= p) bi += 1
-              // widest q for this p: scan forward WITHOUT consuming (the
-              // same b position may close a later p's span too)
-              var j = bi; var qmax = -1L
-              while (j < b.length && b(j) <= p + 1 + slopV) { qmax = b(j); j += 1 }
-              if (qmax >= 0) {
-                while (li < l.length && l(li) < p) li += 1
-                while (li < l.length && l(li) <= qmax) { hits += 1; li += 1 }
-              }
-              ai += 1
-            }
-            if (hits > 0) Iterator.single((docId, hits)) else Iterator.empty
-          case _ => Iterator.empty
+    positionalHits(Seq(Seq(first), Seq(second), Seq(little))) { case Array(a, b, l) =>
+      var hits = 0L
+      var bi = 0; var li = 0; var ai = 0
+      while (ai < a.length) {
+        val p = a(ai)
+        while (bi < b.length && b(bi) <= p) bi += 1
+        // widest q for this p: scan forward WITHOUT consuming (the
+        // same b position may close a later p's span too)
+        var j = bi; var qmax = -1L
+        while (j < b.length && b(j) <= p + 1 + slopV) { qmax = b(j); j += 1 }
+        if (qmax >= 0) {
+          while (li < l.length && l(li) < p) li += 1
+          while (li < l.length && l(li) <= qmax) { hits += 1; li += 1 }
         }
+        ai += 1
       }
-      .toDF("docId", "hits")
+      hits
+    }.getOrElse(empty)
   }
 
   /** Span-containing (the Elasticsearch/Lucene `span_containing` query, big
@@ -2672,11 +2519,10 @@ final class IndexReader(
 
   /** Filters aggregation (the Elasticsearch `filters` agg with one term
     * query per named bucket): per-name matching-document counts, served
-    * entirely from block METADATA in one job — a single (term, df)-projected
-    * scan pruned to the filter terms' bucket dirs with a pushed IN filter
-    * (every block of a term carries the GLOBAL df, see [[suggest]]), no
-    * posting decode at any corpus scale. Names must be unique; a term may
-    * back several names (each name reports the full term match count).
+    * entirely from block METADATA in one job — the [[termDf]] lookup of the
+    * filter terms, no posting decode at any corpus scale. Names must be
+    * unique; a term may back several names (each name reports the full
+    * term match count).
     *
     * @param filters (name, term) pairs.
     * @return (name, hits) rows; a name whose term is absent is omitted
@@ -2690,15 +2536,8 @@ final class IndexReader(
     require(fl.map(_._1).distinct.length == fl.length,
       "filter names must be unique")
     if (fl.isEmpty || manifest.isEmpty) return empty
-    val terms = fl.map(_._2).distinct
-    val paths = termBucketPaths(terms)
-    if (paths.isEmpty) return empty
-    val nameRows = fl.map { case (nm, t) => (nm, t) }.toDF("name", "__term")
-    spark.read.schema(blockSchema).parquet(paths: _*)
-      .where(col("term").isin(terms: _*))
-      .groupBy("term").agg(max(col("df")).as("hits"))
-      .join(broadcast(nameRows), col("term") === col("__term"))
-      .select("name", "hits")
+    val df = termDf(fl.map(_._2).distinct)
+    fl.collect { case (nm, t) if df(t) > 0 => (nm, df(t)) }.toDF("name", "hits")
   }
 
   /** Adjacency-matrix aggregation (the Elasticsearch `adjacency_matrix`
@@ -3127,8 +2966,7 @@ final class IndexReader(
     * semantics: the doc's text comes from the caller's source table (the
     * index stores postings, never raw text — the same index/source split
     * as [[killa.query.Snippets]]); term statistics come from ONE
-    * (term, df)-projected scan pruned to the doc's terms' buckets
-    * ([[termBucketPaths]]), payloads never decoded. The window runs over
+    * [[termDf]] scan, payloads never decoded. The window runs over
     * one conversation's turns — bounded by construction.
     *
     * @return (term, tf, df, positions) rows, term asc; positions are the
@@ -3154,15 +2992,9 @@ final class IndexReader(
     // one doc's vocabulary — bounded driver work by construction
     val docTerms = tv.select("term").as[String].collect().toSeq
     if (docTerms.isEmpty) return empty
-    val paths = termBucketPaths(docTerms)
-    val dfDf =
-      if (paths.isEmpty) Seq.empty[(String, Long)].toDF("term", "df")
-      else spark.read.schema(blockSchema).parquet(paths: _*)
-        .where(col("term").isin(docTerms: _*))
-        .groupBy("term").agg(max(col("df")).as("df"))
-    tv.join(dfDf, Seq("term"), "left")
-      .select(col("term"), col("tf"),
-        coalesce(col("df"), lit(0L)).as("df"), col("positions"))
+    val dfDf = termDf(docTerms).toSeq.toDF("term", "df")
+    tv.join(dfDf, "term")
+      .select(col("term"), col("tf"), col("df"), col("positions"))
       .orderBy("term")
   }
 
@@ -3206,12 +3038,26 @@ final class IndexReader(
     docIds.join(docsView, "docId").select(col("convId").as("conv_id"))
   }
 
-  /** Document frequency per term (0 when absent). */
-  def termDf(terms: Seq[String]): Map[String, Long] =
-    terms.map { t =>
-      val row = postingBlocks(t).limit(1).collect()
-      t -> (if (row.isEmpty) 0L else row(0).df)
-    }.toMap
+  /** Document frequency per term: every requested term is keyed, 0 when
+    * absent — the one known-term df lookup. ONE (term, df)-projected scan
+    * pruned to the terms' bucket dirs ([[termBucketPaths]]), with a pushed
+    * IN filter the sorted term column's row-group stats prune on; payloads
+    * never decode, and the collect is bounded by the request. max(df) per
+    * term is exact, not a segment merge: a term lives in exactly one bucket
+    * dir (maintenance rewrites affected buckets WHOLE) and every block of a
+    * term carries the GLOBAL df (see [[suggest]]).
+    */
+  def termDf(terms: Seq[String]): Map[String, Long] = {
+    val known = cleanTerms(terms)
+    val paths = termBucketPaths(known)
+    val found: Map[String, Long] =
+      if (paths.isEmpty) Map.empty
+      else bucketFrames(paths)
+        .where(col("term").isin(known: _*))
+        .groupBy("term").agg(max(col("df")).as("df"))
+        .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
+    terms.map(t => t -> found.getOrElse(t, 0L)).toMap
+  }
 
   /** Distributed top-k BM25 (north_star: posting-list intersection +
     * block-max pruning).
@@ -3808,29 +3654,15 @@ final class IndexReader(
       .select("term", "tf").collect()
       .map(r => r.getString(0) -> r.getLong(1))
     if (docTerms.isEmpty) return emptyHits
-    // global df for exactly the doc's terms: one (term, df)-projected scan,
-    // pruned to the SELECTED TERMS' bucket dirs (term → bucket is a pure
-    // hash, same mapping phrase() uses — VERDICT r4 wrong #2: listing every
-    // bucket dir is thousands of needless file listings per query at corpus
-    // scale), then row-group stats prune on the IN filter inside each file.
-    // max(df) per term is exact, not a segment merge: a term lives in
-    // exactly one bucket dir (maintenance rewrites affected buckets WHOLE,
-    // IndexMaintainer step 5) and buildBlocks stamps the global df into
-    // every block it emits.
-    val paths = termBucketPaths(docTerms.map(_._1).toSeq)
-    val dfMap: Map[String, Long] =
-      if (paths.isEmpty) Map.empty
-      else spark.read.schema(blockSchema).parquet(paths: _*)
-        .where(col("term").isin(docTerms.map(_._1).toSeq: _*))
-        .groupBy("term").agg(max(col("df")).as("df"))
-        .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
+    // global df for exactly the doc's terms: one bucket-pruned scan
+    val dfMap = termDf(docTerms.map(_._1).toSeq)
     val n = m.numDocs
     // stopword guard: drop terms in more than maxDfPct% of docs (default
     // half). Integer arithmetic so the SQL oracle mirrors it exactly; 100
     // disables the guard — the right setting for tiny-vocabulary corpora
     // where every term is hot.
     val selected = docTerms
-      .map { case (t, tf) => (t, tf, dfMap.getOrElse(t, 1L)) }
+      .map { case (t, tf) => (t, tf, dfMap(t).max(1L)) }
       .filter { case (_, _, df) => df * 100L <= n * maxDfPct.toLong }
       .sortBy { case (t, tf, df) => (-tf, df, t) }
       .take(maxTerms).map(_._1).toSeq
@@ -3878,15 +3710,9 @@ final class IndexReader(
       .groupBy("term").agg(sum(col("tf")).as("stf"))
       .collect().map(r => r.getString(0) -> r.getLong(1))
     if (cand.isEmpty) return hitsDf(topKRowsImpl(q, m))
-    val paths = termBucketPaths(cand.map(_._1).toSeq)
-    val dfMap: Map[String, Long] =
-      if (paths.isEmpty) Map.empty
-      else spark.read.schema(blockSchema).parquet(paths: _*)
-        .where(col("term").isin(cand.map(_._1).toSeq: _*))
-        .groupBy("term").agg(max(col("df")).as("df"))
-        .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
+    val dfMap = termDf(cand.map(_._1).toSeq)
     val expansion = cand
-      .map { case (t, stf) => (t, stf, dfMap.getOrElse(t, 1L)) }
+      .map { case (t, stf) => (t, stf, dfMap(t).max(1L)) }
       .filter { case (_, _, df) => df * 100L <= m.numDocs * maxDfPct.toLong }
       .sortBy { case (t, stf, df) => (-stf, df, t) }
       .take(fbTerms).map(_._1).toSeq
@@ -3920,17 +3746,11 @@ final class IndexReader(
       .select("term", "tf").collect()
       .map(r => r.getString(0) -> r.getLong(1)).toMap
     if (tfMap.isEmpty) return empty
-    val paths = termBucketPaths(tfMap.keys.toSeq)
-    val dfMap: Map[String, Long] =
-      if (paths.isEmpty) Map.empty
-      else spark.read.schema(blockSchema).parquet(paths: _*)
-        .where(col("term").isin(tfMap.keys.toSeq: _*))
-        .groupBy("term").agg(max(col("df")).as("df"))
-        .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
+    val dfMap = termDf(tfMap.keys.toSeq)
     val n = m.numDocs; val k1 = conf.k1; val b = conf.b; val avgdl = m.avgdl
     terms.sorted.flatMap { t =>
       tfMap.get(t).map { tf =>
-        val df = dfMap.getOrElse(t, 1L)
+        val df = dfMap(t).max(1L)
         (t, tf, dl, df, Bm25.idf(n, df),
           Bm25.contrib(Bm25.weight(n, df, k1), tf, dl, k1, b, avgdl))
       }
@@ -3939,15 +3759,28 @@ final class IndexReader(
 
   /** Bucket dirs holding EXACTLY the given terms' postings (term → bucket is
     * a pure hash), existing dirs only — the pruned path set of any
-    * several-known-terms scan ([[moreLikeThis]]'s df lookup). Spec-asserted
-    * a strict subset of the full bucket listing in Round5Spec.
+    * several-known-terms scan ([[termDf]], [[membershipAny]], [[termsSet]],
+    * [[adjacencyMatrix]]).
+    * Spec-asserted a strict subset of the full bucket listing in Round5Spec.
     */
-  private[killa] def termBucketPaths(terms: Seq[String]): Seq[String] = manifest match {
-    case None => Nil
-    case Some(m) =>
-      terms.map(t => Hashing.termBucket(t, m.nBuckets)).distinct.sorted
-        .flatMap(m.bucketPath).filter(p => fs(p).exists(new Path(p)))
-  }
+  private[killa] def termBucketPaths(terms: Seq[String]): Seq[String] =
+    termDirs(terms)(_.bucketPath)
+
+  /** [[termBucketPaths]] over the positional index: the position-bucket dirs
+    * holding exactly the given terms' position lists — the path set of the
+    * one [[positionalHits]] scan. Spec-asserted a strict subset of all
+    * position dirs in PositionalSpec.
+    */
+  private[killa] def termPosPaths(terms: Seq[String]): Seq[String] =
+    termDirs(terms)(_.posPath)
+
+  private def termDirs(terms: Seq[String])(dir: Manifest => Int => Option[String]): Seq[String] =
+    manifest match {
+      case None => Nil
+      case Some(m) =>
+        terms.map(t => Hashing.termBucket(t, m.nBuckets)).distinct.sorted
+          .flatMap(dir(m)).filter(p => fs(p).exists(new Path(p)))
+    }
 
   /** Shared exact top-k resolution: local fast path, else ONE execution of
     * the distributed candidate pipeline resolved by [[finishRows]]. Both
