@@ -585,9 +585,10 @@ object Bench {
          |
          |## Reference scaling study (10M turns, one-off, exclusive box)
          |
-         |Measured 2026-08-16 with `graft.BuildProfile 1000000 2 8` (1M convs ×
-         |10 turns, one warmup build then one profiled full build per level,
-         |nothing else running):
+         |Measured 2026-08-16 with the one-off `graft.BuildProfile 1000000 2 8`
+         |(1M convs × 10 turns, one warmup build then one profiled full build per
+         |level, nothing else running). That tool has since been deleted: its
+         |per-stage split is what killabench's traced `build.*` keys report.
          |
          || cores | build wall | total executor core-sec |
          ||---|---|---|

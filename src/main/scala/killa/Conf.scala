@@ -47,7 +47,9 @@ package killa
   *                    churn, so the cache is consistency-free; the cap keeps
   *                    the driver bounded at any dictionary size.
   * @param blockCacheMaxBytes byte budget of the reader's hot-postings block
-  *                    cache (encoded payload bytes). A serving frontend
+  *                    cache: encoded payload bytes plus the decoded
+  *                    arrays (24 B per posting) each cached block keeps
+  *                    once a query has stepped into it. A serving frontend
   *                    keeps its hot working set in RAM — the Lucene
   *                    page-cache analog, consistency-free because readers
   *                    are snapshot-pinned; repeat queries on cached terms

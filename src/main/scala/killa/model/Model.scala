@@ -2,6 +2,8 @@ package killa.model
 
 import java.sql.Timestamp
 
+import killa.codec.{Delta, Varint}
+
 /** One turn of a multi-turn conversation transcript — the input row shape
   * (BASELINE.json input_hint). The analog of one line of a watched file in the
   * reference (FileAnalyzer.cs:69-78 reads line-by-line); the conversation
@@ -52,6 +54,12 @@ final case class PostingRun(
   * valid even if corpus stats (avgdl, N) drift under incremental maintenance:
   * impact tf/(tf + k1(1-b+b·dl/avgdl)) is increasing in tf and decreasing in
   * dl, so bound(maxTf, minDl) ≥ any member's impact for any avgdl > 0.
+  *
+  * `docs`/`tfs`/`dls` are the decoded payload, computed at most once per
+  * instance, when a DAAT cursor first steps into the block: a reader's
+  * cached blocks are decoded once and then shared, read-only, by every later
+  * query and every parallel range. They are not part of the row (`@transient`,
+  * outside the constructor), so a deserialized copy decodes for itself.
   */
 final case class PostingBlock(
     term: String,
@@ -65,7 +73,11 @@ final case class PostingBlock(
     docsBin: Array[Byte],
     tfsBin: Array[Byte],
     dlsBin: Array[Byte],
-    bkt: Int)
+    bkt: Int) {
+  @transient private[killa] lazy val docs: Array[Long] = Delta.decode(docsBin, n)
+  @transient private[killa] lazy val tfs: Array[Long] = Varint.decode(tfsBin, n)
+  @transient private[killa] lazy val dls: Array[Long] = Varint.decode(dlsBin, n)
+}
 
 /** Per-partition build lineage + metrics row (north rule: "resumable from
   * per-partition checkpoints with lineage + doc/term/posting metrics recorded

@@ -1,8 +1,5 @@
 package killa.query
 
-import scala.collection.mutable
-
-import killa.codec.{Delta, Varint}
 import killa.model.PostingBlock
 
 /** Document-at-a-time scoring over posting blocks within one docId range —
@@ -35,6 +32,12 @@ object Daat {
     * decode for exact liveness are the ≤ 2 straddling a range boundary
     * (their in-range slice can be empty); interior blocks are live by
     * construction (every stored posting is a real doc).
+    *
+    * "Decode" is the block's own memo (`PostingBlock.docs`/`tfs`/`dls`): a
+    * block is delta+varint-decoded at most once per instance, the first time
+    * any cursor steps into it, so a warm reader's cached blocks decode once
+    * and every later query and parallel range reads the same arrays. The
+    * cursor only reads them; nothing writes into a block's decoded arrays.
     */
   private final class TermCursor(blocks: Array[PostingBlock], lo: Long, hi: Long) {
     private var bi = 0
@@ -58,9 +61,9 @@ object Daat {
     private def ensureDecoded(): Unit = {
       while (!dead && !decoded) {
         val b = blocks(bi)
-        docs = Delta.decode(b.docsBin, b.n)
-        tfs = Varint.decode(b.tfsBin, b.n)
-        dls = Varint.decode(b.dlsBin, b.n)
+        docs = b.docs
+        tfs = b.tfs
+        dls = b.dls
         i = 0
         while (i < b.n && docs(i) <= lo) i += 1
         decoded = true
@@ -186,8 +189,13 @@ object Daat {
     * reach the global top-k under any tie-break.
     */
   private[query] final class TopK(k: Int, floor: Double = Double.NegativeInfinity) {
-    private val minHeap = mutable.PriorityQueue.empty[Double](Ordering[Double].reverse)
-    private val buf = mutable.ArrayBuffer.empty[(Long, Double)]
+    // binary min-heap of the best ≤ k admitted scores, heap(0) the smallest
+    private var heap = new Array[Double](math.max(1, math.min(k, 16)))
+    private var heapSize = 0
+    // admitted candidates in arrival order, as parallel primitive arrays
+    private var bufDocs = new Array[Long](64)
+    private var bufScores = new Array[Double](64)
+    private var bufSize = 0
     // compaction keeps buf at O(k + ties-at-threshold) even under an
     // adversarial ascending-score order (every admission raises the
     // threshold, stranding earlier entries): evict sub-threshold entries
@@ -195,30 +203,80 @@ object Daat {
     // compaction can't shrink (all survivors are genuine ties that drain()
     // must keep), so repeated no-op compactions amortize to O(1) per offer.
     private var compactAt = math.max(4 * k, 64)
-    private[query] def bufferedCount: Int = buf.length
+    private[query] def bufferedCount: Int = bufSize
     // the floor (ES `min_score`) SEEDS the WAND threshold: block-max skips
     // engage from the first block instead of only after k admissions, and
     // admission `score >= threshold >= floor` makes every drained candidate
     // satisfy the floor by construction — min_score is a pruning GAIN here,
-    // never a post-filter
-    def threshold: Double =
-      if (minHeap.size < k) floor else math.max(floor, minHeap.head)
+    // never a post-filter. Kept as a field (the scoring loops read it once
+    // per candidate) and recomputed only when offer changes the heap:
+    // floor while the heap holds < k scores, else max(floor, heap min).
+    private var thr = floor
+    def threshold: Double = thr
     def offer(score: Double, doc: Long): Unit = {
-      if (score >= threshold) { // ≥ admits ties (SURVEY.md §7.5.1)
-        buf += ((doc, score))
-        if (minHeap.size < k) minHeap.enqueue(score)
-        else if (score > minHeap.head) { minHeap.dequeue(); minHeap.enqueue(score) }
-        if (buf.length > compactAt) {
-          val t = threshold
-          val kept = buf.filter(_._2 >= t)
-          buf.clear(); buf ++= kept
-          compactAt = math.max(math.max(4 * k, 64), 2 * buf.length)
+      if (score >= thr) { // ≥ admits ties (SURVEY.md §7.5.1)
+        if (bufSize == bufDocs.length) {
+          bufDocs = java.util.Arrays.copyOf(bufDocs, bufSize * 2)
+          bufScores = java.util.Arrays.copyOf(bufScores, bufSize * 2)
+        }
+        bufDocs(bufSize) = doc
+        bufScores(bufSize) = score
+        bufSize += 1
+        if (heapSize < k) {
+          push(score)
+          if (heapSize == k) thr = math.max(floor, heap(0))
+        } else if (score > heap(0)) {
+          replaceMin(score)
+          thr = math.max(floor, heap(0))
+        }
+        if (bufSize > compactAt) {
+          val t = thr
+          var kept = 0
+          var i = 0
+          while (i < bufSize) {
+            if (bufScores(i) >= t) {
+              bufDocs(kept) = bufDocs(i)
+              bufScores(kept) = bufScores(i)
+              kept += 1
+            }
+            i += 1
+          }
+          bufSize = kept
+          compactAt = math.max(math.max(4 * k, 64), 2 * bufSize)
         }
       }
     }
     def drain(): Iterator[(Long, Double)] = {
-      val t = threshold
-      buf.iterator.filter(_._2 >= t)
+      val t = thr
+      Iterator.range(0, bufSize).filter(bufScores(_) >= t).map(i => (bufDocs(i), bufScores(i)))
+    }
+
+    private def push(score: Double): Unit = {
+      if (heapSize == heap.length)
+        heap = java.util.Arrays.copyOf(heap, math.min(k.toLong, heapSize * 2L).toInt)
+      var i = heapSize
+      heapSize += 1
+      while (i > 0 && heap((i - 1) >>> 1) > score) {
+        heap(i) = heap((i - 1) >>> 1)
+        i = (i - 1) >>> 1
+      }
+      heap(i) = score
+    }
+
+    /** Replace the minimum with `score` (> it) and sift down. */
+    private def replaceMin(score: Double): Unit = {
+      var i = 0
+      var done = false
+      while (!done) {
+        val l = 2 * i + 1
+        if (l >= heapSize) done = true
+        else {
+          val c = if (l + 1 < heapSize && heap(l + 1) < heap(l)) l + 1 else l
+          if (heap(c) < score) { heap(i) = heap(c); i = c }
+          else done = true
+        }
+      }
+      heap(i) = score
     }
   }
 

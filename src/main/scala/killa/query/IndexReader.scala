@@ -3795,15 +3795,20 @@ final class IndexReader(
   // Bounded hot-postings block cache — the serving frontend's working set
   // (the Lucene/OS-page-cache analog, explicit because our store is remote
   // at production scale). Snapshot-pinned reader ⇒ consistency-free.
-  // Insert-only under a byte budget of encoded payload: once the budget is
-  // spent, further terms simply keep paying the one-scan-job path — never
-  // unbounded, never wrong.
+  // Insert-only under a byte budget charged per block for its encoded
+  // payload AND its decoded arrays (3 Longs = 24 B per posting: a cached
+  // block is decoded once on first use and keeps the arrays for the reader's
+  // life): once the budget is spent, further terms simply keep paying the
+  // one-scan-job path — never unbounded, never wrong.
   private val blockCache =
     new java.util.concurrent.ConcurrentHashMap[String, Array[PostingBlock]]()
   private val blockCacheBytes = new java.util.concurrent.atomic.AtomicLong(0L)
   private def blockBytes(bs: Array[PostingBlock]): Long =
     bs.foldLeft(0L)((acc, b) =>
-      acc + 64L + b.docsBin.length + b.tfsBin.length + b.dlsBin.length)
+      acc + 64L + b.docsBin.length + b.tfsBin.length + b.dlsBin.length + 24L * b.n)
+  /** The cached blocks of `term` (null when not cached) — the very instances
+    * warm queries score, for specs that inspect their payload and memo. */
+  private[killa] def cachedBlocks(term: String): Array[PostingBlock] = blockCache.get(term)
   private def cachePut(term: String, bs: Array[PostingBlock]): Unit = {
     val sz = blockBytes(bs)
     if (conf.blockCacheMaxBytes > 0 &&

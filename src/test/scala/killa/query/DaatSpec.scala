@@ -51,4 +51,23 @@ class DaatSpec extends AnyFunSuite {
     val exp = scores.filter(_ >= kth).sorted.reverse.toSeq
     assert(got == exp)
   }
+
+  test("TopK threshold equals the brute-force k-th best after every offer (ties, floor)") {
+    val rnd = new scala.util.Random(7)
+    for (k <- Seq(1, 3, Int.MaxValue); floor <- Seq(Double.NegativeInfinity, 40.0); trial <- 0 until 5) {
+      // few distinct values ⇒ many ties at the threshold
+      val scores = Array.fill(400)(rnd.nextInt(60).toDouble)
+      val topk = new Daat.TopK(k, floor)
+      val offered = scala.collection.mutable.ArrayBuffer.empty[Double]
+      scores.zipWithIndex.foreach { case (s, i) =>
+        topk.offer(s, i.toLong)
+        offered += s
+        val exp =
+          if (offered.length < k) floor
+          else math.max(floor, offered.sortWith(_ > _).apply(k - 1))
+        assert(topk.threshold == exp,
+          s"k=$k floor=$floor trial=$trial after ${offered.length} offers")
+      }
+    }
+  }
 }
