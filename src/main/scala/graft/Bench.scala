@@ -18,7 +18,7 @@ import killa.synth.Synth
   * the driver and writes the human report to BENCH.md.
   */
 object Bench {
-  private val conf = Conf(nBuckets = 32, rangeDocs = 131072, waveBuckets = 32, blockSize = 128)
+  private[graft] val conf = Conf(nBuckets = 32, rangeDocs = 131072, waveBuckets = 32, blockSize = 128)
 
   private def session(cpus: Int): SparkSession = {
     val s = SparkSession.builder()

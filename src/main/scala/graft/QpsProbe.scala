@@ -4,7 +4,6 @@ import java.nio.file.{Files, Paths}
 
 import org.apache.spark.sql.SparkSession
 
-import killa.Conf
 import killa.query.IndexReader
 
 /** Reader-replication scaling probe: one stateless serving frontend over an
@@ -45,8 +44,7 @@ object QpsProbe {
         sys.env.getOrElse("KILLA_LOCAL_DIR", "/dev/shm/killa-shuffle"))
       .getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
-    val conf = Conf(nBuckets = 32, rangeDocs = 131072, waveBuckets = 32, blockSize = 128)
-    val reader = new IndexReader(spark, root, conf)
+    val reader = new IndexReader(spark, root, Bench.conf)
     val queries: Seq[() => Long] = Seq(
       () => reader.membershipCount("the"),
       () => reader.membershipCount(s"uniq${nConvs / 2}_0"),

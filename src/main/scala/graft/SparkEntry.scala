@@ -1649,13 +1649,6 @@ object SparkEntry {
       killa.dedup.Dedup.connectedComponents(docs.select("doc_id"), "doc_id", pairs)
         .select(col("id").as("doc_id"), col("cluster")).orderBy("doc_id")
     }),
-    "q_mm_features" -> ((s, dir) => {
-      val rows = killa.mm.Multimodal.payloadize(documents(s, dir), "doc_id", "text", "text/plain")
-      rows.select(col("id"), col("kind"),
-        length(col("payload")).cast("long").as("n_bytes"),
-        md5(col("payload")).as("payload_md5"))
-        .orderBy("id")
-    }),
     "q_stream_window" -> ((s, dir) =>
       killa.streaming.StreamOps.windowedEventCounts(s, s"$dir/events.parquet",
         s"graft_stream_${math.abs(dir.hashCode)}")
@@ -2944,9 +2937,6 @@ object SparkEntry {
       " HAVING sqrt(sum(m * m)) > 0)" +
       " SELECT CAST(m.grp AS BIGINT) AS grp, CAST(m.i AS BIGINT) AS i," +
       " round(m.m / n.nrm, 4) AS v FROM m JOIN n USING (grp) ORDER BY grp, i"),
-    "q_mm_features" -> ("SELECT doc_id AS id, 'text/plain' AS kind," +
-      " octet_length(encode(text)) AS n_bytes, md5(text) AS payload_md5" +
-      " FROM documents ORDER BY id"),
     "q_stream_window" -> ("SELECT time_bucket(INTERVAL '1 hour', ts) AS window_start," +
       " event_type, count(*) AS n, round(sum(value), 4) AS sum_value" +
       " FROM events GROUP BY 1, 2 ORDER BY 1, 2"),

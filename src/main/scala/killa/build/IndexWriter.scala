@@ -6,7 +6,6 @@ import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 
 import killa.Conf
-import killa.codec.{Delta, Varint}
 import killa.model._
 import killa.store.{Manifest, SegmentStore}
 import killa.tokenize.Tokenize
@@ -145,27 +144,12 @@ final class IndexWriter(spark: SparkSession, root: String, conf: Conf = Conf.def
     * dead docs filter out at query time.
     */
   def buildPositions(turns: DataFrame, buildId: String): Manifest = {
-    import spark.implicits._
-    import org.apache.spark.sql.expressions.Window
     val m0 = SegmentStore.latest(spark, root)
       .getOrElse(throw new IllegalStateException(s"no index at $root — run a full build first"))
     val dir = s"$root/positions/$buildId"
     val dict = killa.store.Logs.docsAlive(spark, m0)
       .select(col("convId").as("conv_id"), col("docId"))
-    val toks = turns.select(col("conv_id"), col("turn_idx"),
-      posexplode(Tokenize.termsCol(col("text"))).as(Seq("tpos", "term")))
-    val w = Window.partitionBy("conv_id").orderBy("turn_idx", "tpos")
-    val nb = conf.nBuckets
-    val rows = toks.withColumn("pos", row_number().over(w).cast("long") - 1L)
-      .join(dict, "conv_id")
-      .groupBy(col("term"), col("docId"))
-      .agg(sort_array(collect_list(col("pos"))).as("positions"))
-      .as[(String, Long, Seq[Long])]
-      .map { case (term, docId, ps) =>
-        killa.model.PosRow(term, docId, ps.length, Delta.encode(ps.toArray),
-          Hashing.termBucket(term, nb))
-      }
-    rows.toDF().withColumn("bkt_p", col("bkt"))
+    positionRows(turns, dict, conf.nBuckets).toDF().withColumn("bkt_p", col("bkt"))
       .repartition(col("bkt_p")).sortWithinPartitions("term", "docId")
       .write.partitionBy("bkt_p").mode("overwrite").parquet(dir)
     Ledger.append(spark, root, Seq(
@@ -396,12 +380,10 @@ object IndexWriter {
         val total = n
         (0 until total by bs).iterator.map { start =>
           val end = math.min(start + bs, total)
-          val bn = end - start
-          val bd = java.util.Arrays.copyOfRange(docs, start, end)
-          val bt = java.util.Arrays.copyOfRange(tfs, start, end)
-          val bl = java.util.Arrays.copyOfRange(dls, start, end)
-          PostingBlock(term, base + start / bs, 0L, bn, bd(0), bd(bn - 1),
-            bt.max, bl.min, Delta.encode(bd), Varint.encode(bt), Varint.encode(bl), bkt)
+          PostingBlock.encode(term, base + start / bs, 0L,
+            java.util.Arrays.copyOfRange(docs, start, end),
+            java.util.Arrays.copyOfRange(tfs, start, end),
+            java.util.Arrays.copyOfRange(dls, start, end), bkt)
         }
       }
     // global df per term aggregated straight from the forward rows (map-side
@@ -427,6 +409,29 @@ object IndexWriter {
         col("firstDoc"), col("lastDoc"), col("maxTf"), col("minDl"),
         col("docsBin"), col("tfsBin"), col("dlsBin"), col("bkt"))
       .as[PostingBlock]
+  }
+
+  /** The position rows of `turns`: one [[PosRow]] per (term, docId), each
+    * position the global token rank under the stable (turn_idx, token
+    * ordinal) order; `dict` maps conv_id → docId. Lazy (no Spark action), so
+    * [[IndexWriter.buildPositions]] and a maintenance batch derive
+    * byte-identical rows from the same turns.
+    */
+  def positionRows(turns: DataFrame, dict: DataFrame, nBuckets: Int): Dataset[PosRow] = {
+    val spark = turns.sparkSession
+    import spark.implicits._
+    import org.apache.spark.sql.expressions.Window
+    val toks = turns.select(col("conv_id"), col("turn_idx"),
+      posexplode(Tokenize.termsCol(col("text"))).as(Seq("tpos", "term")))
+    val w = Window.partitionBy("conv_id").orderBy("turn_idx", "tpos")
+    toks.withColumn("pos", row_number().over(w).cast("long") - 1L)
+      .join(dict, "conv_id")
+      .groupBy(col("term"), col("docId"))
+      .agg(sort_array(collect_list(col("pos"))).as("positions"))
+      .as[(String, Long, Seq[Long])]
+      .map { case (term, docId, ps) =>
+        PosRow.encode(term, docId, ps.toArray, Hashing.termBucket(term, nBuckets))
+      }
   }
 
   /** Segment layout: one dir per commit, hive-partitioned by bkt_p for

@@ -5,7 +5,6 @@ import org.apache.spark.sql.functions._
 
 import killa.Conf
 import killa.build.{Dict, IndexWriter, Ledger}
-import killa.codec.{Delta, Varint}
 import killa.model.{LedgerRow, PosRow, PostingBlock}
 import killa.store.{Logs, Manifest, SegmentStore}
 import killa.tokenize.Tokenize
@@ -179,24 +178,10 @@ final class IndexMaintainer(spark: SparkSession, root: String, conf: Conf = Conf
       // (Indexer.cs:74-91, IndexerTests.cs:219-262).
       val dictChanged = renameRows.nonEmpty || nDeleted > 0 || !fresh.isEmpty
 
-      // fresh position rows of this batch's changed convs — the maintenance
-      // analog of IndexWriter.buildPositions, derived from the SAME turns
-      def freshPositions(): DataFrame = {
-        import org.apache.spark.sql.expressions.Window
-        val nbc = conf.nBuckets
-        val toks = changed0.select(col("conv_id"), col("turn_idx"),
-          posexplode(Tokenize.termsCol(col("text"))).as(Seq("tpos", "term")))
-        val pw = Window.partitionBy("conv_id").orderBy("turn_idx", "tpos")
-        toks.withColumn("pos", row_number().over(pw).cast("long") - 1L)
-          .join(dict, "conv_id")
-          .groupBy(col("term"), col("docId"))
-          .agg(sort_array(collect_list(col("pos"))).as("positions"))
-          .as[(String, Long, Seq[Long])]
-          .map { case (term, docId, ps) =>
-            PosRow(term, docId, ps.length, Delta.encode(ps.toArray),
-              killa.util.Hashing.termBucket(term, nbc))
-          }.toDF()
-      }
+      // fresh position rows of this batch's changed convs, from the builder
+      // IndexWriter.buildPositions uses: stalePositions compares posBin bytes
+      def freshPositions(): DataFrame =
+        IndexWriter.positionRows(changed0, dict, conf.nBuckets).toDF()
       val posSchema = org.apache.spark.sql.Encoders.product[PosRow].schema
 
       // a token-order-only edit leaves every tf/dl unchanged (empty posting
@@ -239,9 +224,7 @@ final class IndexMaintainer(spark: SparkSession, root: String, conf: Conf = Conf
           if (oldPaths.isEmpty)
             Seq.empty[(String, Long, Long, Long, Int)].toDF("term", "docId", "tf", "dl", "bkt")
           else spark.read.parquet(oldPaths: _*).as[PostingBlock].flatMap { blk =>
-            val ds = Delta.decode(blk.docsBin, blk.n)
-            val ts = Varint.decode(blk.tfsBin, blk.n)
-            val ls = Varint.decode(blk.dlsBin, blk.n)
+            val ds = blk.docs; val ts = blk.tfs; val ls = blk.dls
             (0 until blk.n).iterator.map(i => (blk.term, ds(i), ts(i), ls(i), blk.bkt))
           }.toDF("term", "docId", "tf", "dl", "bkt")
         val retained = decoded.join(removedPostings, Seq("term", "docId"), "left_anti")

@@ -17,37 +17,17 @@ final case class Turn(
     tool: String,
     ts: Timestamp)
 
-/** Docid-dictionary entry: conv_id → dense Long docId (the analog of the
-  * reference's normalized-path document key, PathExtensions.cs:7-12), plus the
-  * BM25 document length and the owning source (subscription analog,
-  * FileAnalyzer.cs:91-142).
-  */
-final case class DocEntry(docId: Long, convId: String, dl: Long, source: String)
-
 /** One (term, doc) postings fact: term frequency across all turns of the
   * conversation plus the doc length (carried inline so posting blocks are
   * self-contained at query time — Lucene-norms style).
   */
 final case class TermDoc(term: String, docId: Long, tf: Long, dl: Long, bkt: Int)
 
-/** Salted posting run: all (docId, tf, dl) of one (term, docId / rangeDocs)
-  * slice — a CONTIGUOUS docId range — docId-sorted, varint-coded. Bounded at
-  * rangeDocs postings per task regardless of term hotness (the explicit skew
-  * handling demanded by the north rule), and because ranges tile the docId
-  * domain in order, each run is independently block-encodable with no
-  * cross-run merge.
-  *
-  * @param salt the range ordinal (docId / rangeDocs)
-  */
-final case class PostingRun(
-    term: String,
-    salt: Int,
-    n: Int,
-    docsBin: Array[Byte],
-    tfsBin: Array[Byte],
-    dlsBin: Array[Byte])
-
-/** One immutable posting block in the segment store.
+/** One immutable posting block in the segment store, and the one owner of
+  * the block byte format: the companion's [[PostingBlock.encode]] is the only
+  * writer of a block, and `docs`/`tfs`/`dls` plus [[PostingBlock.decodeDocs]]
+  * are the only readers. No engine file outside `killa.model` and
+  * `killa.codec` names the codec (a `CodecSpec` case checks this).
   *
   * docsBin: delta+varint docIds (ascending); tfsBin/dlsBin: varint.
   * maxTf/minDl give an admissible block-max BM25 impact bound that stays
@@ -74,9 +54,28 @@ final case class PostingBlock(
     tfsBin: Array[Byte],
     dlsBin: Array[Byte],
     bkt: Int) {
-  @transient private[killa] lazy val docs: Array[Long] = Delta.decode(docsBin, n)
+  @transient private[killa] lazy val docs: Array[Long] = PostingBlock.decodeDocs(docsBin, n)
   @transient private[killa] lazy val tfs: Array[Long] = Varint.decode(tfsBin, n)
   @transient private[killa] lazy val dls: Array[Long] = Varint.decode(dlsBin, n)
+}
+
+object PostingBlock {
+
+  /** Encode one block from its parallel docId-ascending arrays (non-empty,
+    * equal length): `n`, `firstDoc`, `lastDoc`, `maxTf` and `minDl` are
+    * derived here, so no caller can disagree with the payload.
+    */
+  def encode(term: String, blockId: Long, df: Long, docs: Array[Long],
+      tfs: Array[Long], dls: Array[Long], bkt: Int): PostingBlock = {
+    val n = docs.length
+    PostingBlock(term, blockId, df, n, docs(0), docs(n - 1), tfs.max, dls.min,
+      Delta.encode(docs), Varint.encode(tfs), Varint.encode(dls), bkt)
+  }
+
+  /** The `n` docIds of a `docsBin` payload — for scans that project only
+    * `(n, docsBin)` and never materialize a whole block.
+    */
+  def decodeDocs(docsBin: Array[Byte], n: Int): Array[Long] = Delta.decode(docsBin, n)
 }
 
 /** Per-partition build lineage + metrics row (north rule: "resumable from
@@ -104,11 +103,17 @@ final case class LedgerRow(
   * within document `docId` — position = rank under the stable
   * (turn_idx, token ordinal) order the north rule pins — delta+varint coded.
   * Basis of phrase queries (an extension beyond the reference, which has
-  * none; its wildcard TODO is the nearest neighbor).
+  * none; its wildcard TODO is the nearest neighbor). The companion owns the
+  * `posBin` format.
   */
 final case class PosRow(term: String, docId: Long, np: Int, posBin: Array[Byte], bkt: Int)
 
-/** A scored query hit. Tie order is (score desc, docId asc); docIds are
-  * assigned by conv_id rank so this equals (score desc, conv_id asc).
-  */
-final case class Hit(docId: Long, convId: String, score: Double)
+object PosRow {
+
+  /** One row from the doc's ascending positions of `term`. */
+  def encode(term: String, docId: Long, positions: Array[Long], bkt: Int): PosRow =
+    PosRow(term, docId, positions.length, Delta.encode(positions), bkt)
+
+  /** The `np` ascending positions of a `posBin` payload. */
+  def decode(posBin: Array[Byte], np: Int): Array[Long] = Delta.decode(posBin, np)
+}

@@ -5,8 +5,7 @@ import org.apache.spark.sql.{Column, DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 
 import killa.Conf
-import killa.codec.{Delta, Varint}
-import killa.model.PostingBlock
+import killa.model.{PosRow, PostingBlock}
 import killa.store.{Manifest, SegmentStore}
 import killa.util.Hashing
 
@@ -119,14 +118,18 @@ final class IndexReader(
     */
   def membership(term: String): DataFrame = {
     if (term == null || term.isEmpty || manifest.isEmpty) return emptyMembers
-    // project only (n, docsBin) so the parquet scan never reads the tf/dl
-    // payload columns (ReadSchema pruning — asserted by PlanSpec)
-    val docIds = postingBlocks(term)
-      .select(col("n"), col("docsBin")).as[(Int, Array[Byte])]
-      .flatMap { case (n, bin) => Delta.decode(bin, n) }
-      .toDF("docId")
-    docIds.join(docsView, "docId").select(col("convId").as("conv_id"))
+    blockDocIds(postingBlocks(term))
+      .join(docsView, "docId").select(col("convId").as("conv_id"))
   }
+
+  /** The docId column of `blocks`, one row per posting: projects only
+    * `(n, docsBin)`, so the parquet scan never reads the tf/dl payload
+    * columns (ReadSchema pruning — asserted by PlanSpec).
+    */
+  private def blockDocIds(blocks: Dataset[_]): DataFrame =
+    blocks.select(col("n"), col("docsBin")).as[(Int, Array[Byte])]
+      .flatMap { case (n, bin) => PostingBlock.decodeDocs(bin, n) }
+      .toDF("docId")
 
   /** The given bucket dirs as one frame, each dir's frame from
     * bucketDfCache (same as single-term membership): repeat multi-term
@@ -152,12 +155,8 @@ final class IndexReader(
     if (terms.length == 1) return membership(terms.head)
     val paths = termBucketPaths(terms)
     if (paths.isEmpty) return emptyMembers
-    val docIds = bucketFrames(paths)
-      .where(col("term").isin(terms: _*))
-      .select(col("n"), col("docsBin")).as[(Int, Array[Byte])]
-      .flatMap { case (n, bin) => Delta.decode(bin, n) }
-      .toDF("docId").distinct()
-    docIds.join(docsView, "docId").select(col("convId").as("conv_id"))
+    blockDocIds(bucketFrames(paths).where(col("term").isin(terms: _*))).distinct()
+      .join(docsView, "docId").select(col("convId").as("conv_id"))
   }
 
   /** Multi-word synonym membership (the ES `synonym_graph` filter shape):
@@ -649,9 +648,7 @@ final class IndexReader(
     // and dl is a per-doc constant (min is a no-op merge)
     def groupRows: DataFrame = gs.zipWithIndex.map { case (g, gi) =>
       g.map(postingBlocks).reduce(_ union _).flatMap { blk =>
-        val docs = Delta.decode(blk.docsBin, blk.n)
-        val tfs = Varint.decode(blk.tfsBin, blk.n)
-        val dls = Varint.decode(blk.dlsBin, blk.n)
+        val docs = blk.docs; val tfs = blk.tfs; val dls = blk.dls
         (0 until blk.n).iterator.map(j => (gi, docs(j), tfs(j), dls(j)))
       }.toDF("g", "docId", "tf", "dl")
     }.reduce(_ unionByName _)
@@ -1732,10 +1729,7 @@ final class IndexReader(
     if (m.numDocs == 0) return empty
     val fgN = membershipCount(term)
     if (fgN == 0) return empty
-    val fgIds = postingBlocks(term)
-      .select(col("n"), col("docsBin")).as[(Int, Array[Byte])]
-      .flatMap { case (nn, bin) => Delta.decode(bin, nn) }
-      .toDF("docId")
+    val fgIds = blockDocIds(postingBlocks(term))
     // one row per (doc, term) in the merged forward view ⇒ count = fg df
     val fgDf = killa.store.Logs.forward(spark, m)
       .select("term", "docId")
@@ -1832,7 +1826,7 @@ final class IndexReader(
     val paths = termPosPaths(terms)
     if (paths.isEmpty) return None
     val slotsV: Array[Array[String]] = slots.map(_.toArray).toArray
-    val posSchema = org.apache.spark.sql.Encoders.product[killa.model.PosRow].schema
+    val posSchema = org.apache.spark.sql.Encoders.product[PosRow].schema
     Some(spark.read.schema(posSchema).parquet(paths: _*)
       .where(col("term").isin(terms: _*))
       .select("term", "docId", "np", "posBin")
@@ -1840,7 +1834,7 @@ final class IndexReader(
       .groupByKey(_._2)
       .flatMapGroups { (docId, it) =>
         val byTerm = scala.collection.mutable.Map.empty[String, Array[Long]]
-        it.foreach { case (t, _, n, bin) => byTerm(t) = Delta.decode(bin, n) }
+        it.foreach { case (t, _, n, bin) => byTerm(t) = PosRow.decode(bin, n) }
         val lists: Array[Array[Long]] = slotsV.map { st =>
           val ls = st.flatMap(byTerm.get)
           if (ls.isEmpty) Array.emptyLongArray
@@ -2322,9 +2316,7 @@ final class IndexReader(
         .flatMap { blk =>
           val w = Bm25.weight(n, blk.df, k1)
           val i = Bm25.idf(n, blk.df)
-          val docs = Delta.decode(blk.docsBin, blk.n)
-          val tfs = Varint.decode(blk.tfsBin, blk.n)
-          val dls = Varint.decode(blk.dlsBin, blk.n)
+          val docs = blk.docs; val tfs = blk.tfs; val dls = blk.dls
           (0 until blk.n).iterator.map { j =>
             (docs(j), Bm25.contrib(w, tfs(j), dls(j), k1, b, avgdl),
               tfs(j), dls(j), i)
@@ -2569,7 +2561,7 @@ final class IndexReader(
       .select(col("term"), col("n"), col("docsBin"))
       .as[(String, Int, Array[Byte])]
       .flatMap { case (t, n, bin) =>
-        Delta.decode(bin, n).iterator.map(d => (d, t))
+        PostingBlock.decodeDocs(bin, n).iterator.map(d => (d, t))
       }
       .groupByKey(_._1)
       .flatMapGroups { (_, it) =>
@@ -2943,12 +2935,8 @@ final class IndexReader(
     if (terms.isEmpty || manifest.isEmpty) return empty
     val paths = termBucketPaths(terms)
     if (paths.isEmpty) return empty
-    val matched = spark.read.schema(blockSchema).parquet(paths: _*)
-      .where(col("term").isin(terms: _*))
-      .select(col("term"), col("n"), col("docsBin"))
-      .as[(String, Int, Array[Byte])]
-      .flatMap { case (_, n, bin) => Delta.decode(bin, n) }
-      .toDF("docId")
+    val matched = blockDocIds(spark.read.schema(blockSchema).parquet(paths: _*)
+      .where(col("term").isin(terms: _*)))
       .groupBy("docId").agg(count(lit(1)).as("matched"))
     val hits = matched.join(docsView, "docId")
       .select(col("convId").as("conv_id"), col("matched"))
@@ -3030,12 +3018,8 @@ final class IndexReader(
     if (manifest.isEmpty) return emptyMembers
     val paths = prunedBucketPaths(prefixHint, lenHint)
     if (paths.isEmpty) return emptyMembers
-    val docIds = spark.read.schema(blockSchema).parquet(paths: _*)
-      .where(termCond)
-      .select(col("n"), col("docsBin")).as[(Int, Array[Byte])]
-      .flatMap { case (n, bin) => Delta.decode(bin, n) }
-      .toDF("docId").distinct()
-    docIds.join(docsView, "docId").select(col("convId").as("conv_id"))
+    blockDocIds(spark.read.schema(blockSchema).parquet(paths: _*).where(termCond))
+      .distinct().join(docsView, "docId").select(col("convId").as("conv_id"))
   }
 
   /** Document frequency per term: every requested term is keyed, 0 when
@@ -3230,10 +3214,8 @@ final class IndexReader(
     ids.repartitionByRange(col("docId")).sortWithinPartitions("docId")
       .as[Long].mapPartitions { it =>
         it.grouped(bs).map { chunk =>
-          val arr = chunk.toArray
-          val ones = Array.fill(arr.length)(1L)
-          PostingBlock("", 0L, 0L, arr.length, arr.head, arr.last, 0L, 1L,
-            Delta.encode(arr), Varint.encode(ones), Varint.encode(ones), -1)
+          val ones = Array.fill(chunk.length)(1L)
+          PostingBlock.encode("", 0L, 0L, chunk.toArray, ones, ones, -1)
         }
       }
   }
@@ -3362,9 +3344,7 @@ final class IndexReader(
     val contribs = q.terms.map(postingBlocks).reduce(_ union _)
       .flatMap { blk =>
         val w = Bm25.weight(n, blk.df, k1) * boostMap.getOrElse(blk.term, 1.0)
-        val docs = Delta.decode(blk.docsBin, blk.n)
-        val tfs = Varint.decode(blk.tfsBin, blk.n)
-        val dls = Varint.decode(blk.dlsBin, blk.n)
+        val docs = blk.docs; val tfs = blk.tfs; val dls = blk.dls
         (0 until blk.n).iterator.map { j =>
           (docs(j), Bm25.contrib(w, tfs(j), dls(j), k1, b, avgdl))
         }
@@ -3387,19 +3367,18 @@ final class IndexReader(
     val kept =
       if (q.mustNot.isEmpty) grouped
       else {
-        val exDocs = q.mustNot.map(postingBlocks).reduce(_ union _)
-          .flatMap(blk => Delta.decode(blk.docsBin, blk.n))
-          .toDF("docId").distinct()
+        val exDocs = blockDocIds(q.mustNot.map(postingBlocks).reduce(_ union _)).distinct()
         grouped.join(exDocs, Seq("docId"), "left_anti")
       }
-    // the dictionary join also drops dead docs (deletes never rewrite blocks)
+    // the dictionary join only labels: blocks hold alive docs alone (every
+    // delete rewrites its term buckets — IndexMaintainer step 5)
     kept.join(docsView, "docId").select(col("convId").as("conv_id"), col("score"))
   }
 
   /** Raw per-document term frequencies of the query terms, as a distributed
     * frame `(conv_id, term, tf)` — one row per (live doc, term) pair, decoded
-    * from the terms' bucket-pruned posting blocks and label-joined (dead docs
-    * drop at the dictionary join, exactly like [[bm25ScoredAll]]). This is
+    * from the terms' bucket-pruned posting blocks (which hold alive docs
+    * alone — every delete rewrites its term buckets) and label-joined. This is
     * the statistics-free building block for CROSS-INDEX scoring models that
     * cannot use any one sub-index's premultiplied weights — combined_fields
     * BM25F recombines these tfs under its own merged field statistics
@@ -3413,8 +3392,7 @@ final class IndexReader(
       return Seq.empty[(String, String, Long)].toDF("conv_id", "term", "tf")
     val rows = terms.map(postingBlocks).reduce(_ union _)
       .flatMap { blk =>
-        val docs = Delta.decode(blk.docsBin, blk.n)
-        val tfs = Varint.decode(blk.tfsBin, blk.n)
+        val docs = blk.docs; val tfs = blk.tfs
         (0 until blk.n).iterator.map(j => (docs(j), blk.term, tfs(j)))
       }
       .toDF("docId", "term", "tf")
@@ -3441,9 +3419,7 @@ final class IndexReader(
     if (m.numDocs == 0 || m.totalTokens == 0) return emptyHits
     val rows = terms.map(postingBlocks).reduce(_ union _)
       .flatMap { blk =>
-        val docs = Delta.decode(blk.docsBin, blk.n)
-        val tfs = Varint.decode(blk.tfsBin, blk.n)
-        val dls = Varint.decode(blk.dlsBin, blk.n)
+        val docs = blk.docs; val tfs = blk.tfs; val dls = blk.dls
         (0 until blk.n).iterator.map(j => (docs(j), blk.term, tfs(j), dls(j)))
       }
       .toDF("docId", "term", "tf", "dl")

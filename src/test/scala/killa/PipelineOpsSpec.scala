@@ -5,11 +5,10 @@ import org.scalatest.funsuite.AnyFunSuite
 
 import killa.ann.Ann
 import killa.dedup.Dedup
-import killa.mm.Multimodal
 import killa.text.TextOps
 
-/** Training-data pipeline operators: dedup family, ANN, text analysis,
-  * multimodal plumbing. Each op has a brute-force in-test oracle.
+/** Training-data pipeline operators: dedup family, ANN, text analysis.
+  * Each op has a brute-force in-test oracle.
   */
 class PipelineOpsSpec extends AnyFunSuite {
   private lazy val spark = TestSpark.spark
@@ -278,19 +277,6 @@ class PipelineOpsSpec extends AnyFunSuite {
     assert(preds(4L) == "de")
     assert(preds(5L) == "es")
     assert(preds(7L) == "und")
-  }
-
-  test("multimodal: batched stub decode is deterministic, schema intact") {
-    val rows = Multimodal.payloadize(docs, "doc_id", "text", "text/plain")
-    val feats = Multimodal.extractFeatures(spark, rows, batchSize = 3).collect()
-      .sortBy(_.id)
-    assert(feats.length == 8)
-    assert(feats(0).n_bytes == docs.collect()(0).getString(1).getBytes("UTF-8").length)
-    assert(feats(7).n_bytes == 0)
-    assert(feats.forall(_.decoded_by == "stub"))
-    // determinism across runs
-    val again = Multimodal.extractFeatures(spark, rows, batchSize = 5).collect().sortBy(_.id)
-    assert(feats.map(_.content_hash).toSeq == again.map(_.content_hash).toSeq)
   }
 
   test("repetition features: top/dup n-gram fractions, short-doc zeros") {

@@ -45,6 +45,18 @@ class PlanSpec extends AnyFunSuite {
       s"payload columns not pruned: $scanLine")
   }
 
+  test("bm25ScoredAll's must-not scan reads only n + docsBin (+ term filter)") {
+    val r = new IndexReader(spark, root, conf)
+    val plan = planOf(r.bm25ScoredAll(Seq("query"), mustNot = Seq("the")))
+    val scanLines = plan.linesIterator
+      .filter(l => l.contains("ReadSchema") && l.contains("EqualTo(term,the)")).toSeq
+    assert(scanLines.nonEmpty, s"no must-not scan found:\n$plan")
+    scanLines.foreach { l =>
+      assert(l.contains("docsBin") && !l.contains("tfsBin") && !l.contains("dlsBin"),
+        s"must-not scan reads payload columns: $l")
+    }
+  }
+
   test("membership joins the dictionary via broadcast (small side broadcast, no full shuffle)") {
     val r = new IndexReader(spark, root, conf)
     val plan = planOf(r.membership("the"))
