@@ -4,180 +4,122 @@ import killa.model.PostingBlock
 
 /** Document-at-a-time scoring over posting blocks within one docId range —
   * the executor-side kernel of the distributed top-k (SURVEY.md §3.1 Spark
-  * analog). Blocks decode lazily; skipping uses their (firstDoc, lastDoc,
-  * maxTf, minDl) metadata:
+  * analog). Skipping uses each block's (firstDoc, lastDoc, maxTf, minDl)
+  * metadata, and a block is decoded only when a doc in it is scored, stepped
+  * over or sought into; the one block that decodes just to find a position
+  * is the initial block straddling the range's low end:
   *
   *  - conjunctive mode (posting-list intersection): driven by max-of-heads;
-  *    seek() skips and never decodes non-overlapping blocks;
-  *  - disjunctive mode: block-max WAND-style pruning — per-candidate upper
-  *    bounds skip scoring, and when the SUM of all current block maxima
-  *    can't reach the heap threshold, every cursor jumps to the next block
-  *    boundary without decoding (whole-block skip). Admission uses ≥ so
-  *    score-equal boundary docs are never dropped (SURVEY.md §7.5.1).
+  *    seeks skip whole blocks on metadata;
+  *  - disjunctive mode: block-max WAND pruning (Ding & Suel 2011) —
+  *    per-candidate upper bounds skip scoring, and when the SUM of all
+  *    current block maxima can't reach the heap threshold, every cursor jumps
+  *    to the nearest block end without decoding (whole-block skip). Admission
+  *    uses ≥ so score-equal boundary docs are never dropped (SURVEY.md §7.5.1).
   *
   * Scores are summed in query-term order for every doc ⇒ bit-identical to
   * the relational oracle's ordered fold.
   */
 object Daat {
 
-  /** Cursor over one term's blocks restricted to docId ∈ (lo, hi].
-    * Decode is TRULY lazy: liveness (`exhausted`), block bounds
-    * (`blockMaxImpact`, `blockEndExclusive`) and block-skip seeks all run on
-    * block METADATA alone for blocks fully inside (lo, hi]; only `doc`/score
-    * access decodes. Before this, every whole-block WAND skip still decoded
-    * its landing block (seek → ensureDecoded, advanceBlock → ensureDecoded),
-    * so a hot term's full posting list was delta+varint-decoded on every
-    * query even when the threshold pruned all of it — measured as the
-    * dominant term in hot single-term latency. The only blocks that must
-    * decode for exact liveness are the ≤ 2 straddling a range boundary
-    * (their in-range slice can be empty); interior blocks are live by
-    * construction (every stored posting is a real doc).
+  /** The docId of an exhausted cursor: above every real doc, so it never
+    * equals a candidate and always wins a max-of-heads.
+    */
+  private final val End = Long.MaxValue
+
+  /** Cursor over one term's blocks restricted to docId ∈ (lo, hi], its state
+    * in three fields set once when it enters a block:
+    *  - `cur`: the current docId, [[End]] once exhausted;
+    *  - `end`: the block's lastDoc + 1, the block-max jump target;
+    *  - `bound`: the block's weighted bound w · impact(maxTf, minDl).
+    *
+    * The constructor resolves the one block that straddles lo, which decodes
+    * to find its first in-range doc. Every later block starts above lo, so
+    * `cur = firstDoc` on entry is exact without a decode, and a block whose
+    * firstDoc ≤ hi holds an in-range doc: liveness (`cur != End`) is read
+    * from metadata alone, also for a block straddling hi.
     *
     * "Decode" is the block's own memo (`PostingBlock.docs`/`tfs`/`dls`): a
     * block is delta+varint-decoded at most once per instance, the first time
-    * any cursor steps into it, so a warm reader's cached blocks decode once
-    * and every later query and parallel range reads the same arrays. The
-    * cursor only reads them; nothing writes into a block's decoded arrays.
+    * `tf`/`dl`/`next` or a seek into it needs its arrays, so a block skipped
+    * on its bound is never decoded and a warm reader's cached blocks decode
+    * once for every later query and parallel range. The cursor only reads
+    * them; nothing writes into a block's decoded arrays.
     */
-  private final class TermCursor(blocks: Array[PostingBlock], lo: Long, hi: Long) {
+  private final class Cursor(blocks: Array[PostingBlock], lo: Long, hi: Long,
+      w: Double, k1: Double, b: Double, avgdl: Double) {
+    var cur: Long = End
+    var end: Long = End
+    var bound: Double = 0.0
     private var bi = 0
-    private var i = 0
-    private var decoded = false
-    private var docs: Array[Long] = _
+    private var i = 0 // position in the current block once it is decoded
+    private var docs: Array[Long] = _ // null until the current block decodes
     private var tfs: Array[Long] = _
     private var dls: Array[Long] = _
-    private var dead = false
-    skipBlocksBelowLo()
 
-    private def skipBlocksBelowLo(): Unit = {
-      while (bi < blocks.length && blocks(bi).lastDoc <= lo) bi += 1
-      if (bi >= blocks.length || blocks(bi).firstDoc > hi) dead = true
+    enter(blockAfter(0, lo))
+    if (cur <= lo) { decode(); scanTo(lo + 1) }
+
+    /** Index of the first block from `j` on whose lastDoc is > `doc`. */
+    private def blockAfter(j0: Int, doc: Long): Int = {
+      var j = j0
+      while (j < blocks.length && blocks(j).lastDoc <= doc) j += 1
+      j
     }
 
-    /** Decode the current block and position at the first in-range doc;
-      * blocks whose in-range slice is empty (boundary straddles only) are
-      * passed over without decoding their successors' payloads.
+    /** Enter block `j` at its start, on metadata alone. */
+    private def enter(j: Int): Unit = {
+      bi = j
+      i = 0
+      docs = null
+      if (j < blocks.length && blocks(j).firstDoc <= hi) {
+        val blk = blocks(j)
+        cur = blk.firstDoc
+        end = blk.lastDoc + 1
+        bound = w * Bm25.impact(blk.maxTf, blk.minDl, k1, b, avgdl)
+      } else cur = End
+    }
+
+    private def decode(): Unit = {
+      val blk = blocks(bi)
+      docs = blk.docs
+      tfs = blk.tfs
+      dls = blk.dls
+    }
+
+    /** Step to the first doc ≥ target in the decoded current block, whose
+      * lastDoc is ≥ target, so the raw scan ends in-block.
       */
-    private def ensureDecoded(): Unit = {
-      while (!dead && !decoded) {
-        val b = blocks(bi)
-        docs = b.docs
-        tfs = b.tfs
-        dls = b.dls
-        i = 0
-        while (i < b.n && docs(i) <= lo) i += 1
-        decoded = true
-        if (i >= b.n) { // whole block ≤ lo (lo-straddle): step to the next
-          bi += 1
-          decoded = false
-          if (bi >= blocks.length || blocks(bi).firstDoc > hi) dead = true
-        } else if (docs(i) > hi) dead = true
-      }
-    }
-
-    /** Leave the current block; decode of the next block is DEFERRED — the
-      * caller may skip it wholesale before ever touching a payload byte.
-      */
-    private def advanceBlock(): Unit = {
-      bi += 1
-      decoded = false
-      if (bi >= blocks.length || blocks(bi).firstDoc > hi) dead = true
-    }
-
-    /** Exact liveness, metadata-only for interior blocks: a block with
-      * firstDoc > lo and lastDoc ≤ hi contains ≥ 1 in-range doc by
-      * construction (all its stored postings are real docs in (lo, hi]).
-      * Only boundary-straddling blocks decode to decide.
-      */
-    def exhausted: Boolean = {
-      if (dead) return true
-      if (decoded) return false
-      val b = blocks(bi)
-      if (b.firstDoc > lo && b.lastDoc <= hi) false
-      else { ensureDecoded(); dead }
-    }
-
-    /** Current docId — metadata-exact without decoding in the deferred
-      * states: an undecoded cursor is always positioned at its block's
-      * start (advanceBlock and deferred seeks land there), and every seek
-      * target / block boundary is > lo, so the first in-range doc IS
-      * firstDoc. The only exception is the initial lo-straddling block
-      * (firstDoc ≤ lo), which decodes once.
-      */
-    def doc: Long = {
-      if (decoded) return docs(i)
-      val b = blocks(bi)
-      if (b.firstDoc > lo) b.firstDoc
-      else { ensureDecoded(); docs(i) }
-    }
-    def tf: Long = { if (!decoded) ensureDecoded(); tfs(i) }
-    def dl: Long = { if (!decoded) ensureDecoded(); dls(i) }
-
-    def next(): Unit = {
-      // stepping INTO a block needs its payload; the guard is inline so the
-      // common decoded-state step stays 3 ops (a call per posting measured
-      // 3x on dense conjunctive scans)
-      if (!decoded) { ensureDecoded(); if (dead) return }
-      i += 1
-      if (i >= docs.length) advanceBlock()
-      else if (docs(i) > hi) dead = true
-    }
-
-    /** Seek to the first posting with docId ≥ target. Whole blocks with
-      * lastDoc < target are skipped via metadata, and a landing block whose
-      * firstDoc ≥ target stays UNDECODED (every doc in it already satisfies
-      * the seek — decode happens only if scoring later touches it).
-      */
-    def seek(target: Long): Unit = {
-      if (dead) return
-      if (decoded) {
-        if (docs(i) >= target) return
-        if (blocks(bi).lastDoc >= target) {
-          // target lives in the current decoded block (lastDoc is a real
-          // doc ≥ target, so this raw scan always terminates in-block —
-          // no per-step next() call overhead on the dense-intersection path)
-          var j = i
-          while (docs(j) < target) j += 1
-          i = j
-          if (docs(i) > hi) dead = true
-          return
-        }
-      }
-      if (blocks(bi).lastDoc < target) {
-        decoded = false
-        while (bi < blocks.length && blocks(bi).lastDoc < target) bi += 1
-        if (bi >= blocks.length || blocks(bi).firstDoc > hi) { dead = true; return }
-      }
-      if (blocks(bi).firstDoc >= target) return // block start ≥ target: defer decode
-      ensureDecoded()
-      if (dead) return
-      if (docs(i) >= target) return
-      // the landing block's lastDoc ≥ target (skip-loop exit condition), so
-      // this raw scan terminates in-block, no per-step call overhead
+    private def scanTo(target: Long): Unit = {
       var j = i
       while (docs(j) < target) j += 1
       i = j
-      if (docs(i) > hi) dead = true
+      cur = if (docs(j) > hi) End else docs(j)
     }
 
-    // memoized per block: the disjunctive loop re-reads the bound every
-    // candidate (sigma + per-candidate bound), which recomputed the same
-    // division thousands of times per block before this cache
-    private var impactBi = -1
-    private var impactVal = 0.0
+    def tf: Long = { if (docs == null) decode(); tfs(i) }
+    def dl: Long = { if (docs == null) decode(); dls(i) }
 
-    /** Admissible impact bound of the CURRENT block (no decode needed). */
-    def blockMaxImpact(k1: Double, b: Double, avgdl: Double): Double = {
-      if (impactBi != bi) {
-        val blk = blocks(bi)
-        impactVal = Bm25.impact(blk.maxTf, blk.minDl, k1, b, avgdl)
-        impactBi = bi
+    def next(): Unit = {
+      if (docs == null) decode()
+      i += 1
+      if (i == docs.length) enter(bi + 1)
+      else cur = if (docs(i) > hi) End else docs(i)
+    }
+
+    /** Move to the first doc ≥ target. Blocks ending below target are
+      * skipped on metadata, and a landing block that starts at or after
+      * target stays undecoded.
+      */
+    def seek(target: Long): Unit = {
+      if (cur >= target) return
+      if (end <= target) {
+        enter(blockAfter(bi + 1, target - 1))
+        if (cur >= target) return
       }
-      impactVal
+      if (docs == null) decode()
+      scanTo(target)
     }
-
-    /** First docId after the current block (block-skip jump target). */
-    def blockEndExclusive: Long = blocks(bi).lastDoc + 1
   }
 
   /** Local top-k candidate set with score-tie retention: keeps every doc
@@ -335,11 +277,13 @@ object Daat {
       floor: Double = Double.NegativeInfinity): Iterator[(Long, Double)] = {
     val nT = termBlocks.length
     if (conjunctive && termBlocks.exists(_.isEmpty)) return Iterator.empty
-    val cursors = termBlocks.map(new TermCursor(_, lo, hi))
-    val exCursors = excludeBlocks.map(new TermCursor(_, lo, hi))
-    val nEx = exCursors.length
-    val incCursors = includeBlocks.map(new TermCursor(_, lo, hi))
-    val nInc = incCursors.length
+    val cursors = Array.tabulate(nT)(t => new Cursor(termBlocks(t), lo, hi, weights(t), k1, b, avgdl))
+    // exclusion and include cursors only seek (candidates are non-decreasing
+    // in both modes) and never read a bound
+    def filterCursors(sets: Array[Array[PostingBlock]]) =
+      sets.map(new Cursor(_, lo, hi, 0.0, k1, b, avgdl))
+    val exCursors = filterCursors(excludeBlocks)
+    val incCursors = filterCursors(includeBlocks)
     // search-after cursor (deep pagination, the Lucene searchAfter analog):
     // admit only docs strictly after (afterScore desc, afterDoc asc) in the
     // result order. Skipped admission never loosens WAND pruning — the heap
@@ -348,136 +292,108 @@ object Daat {
     // this page either. Defaults (+Inf, MinValue) admit everything.
     @inline def admitted(score: Double, doc: Long): Boolean =
       score < afterScore || (score == afterScore && doc > afterDoc)
-    def excluded(doc: Long): Boolean = {
+    def holds(cs: Array[Cursor], doc: Long): Boolean = {
       var e = 0
-      while (e < nEx) {
-        val c = exCursors(e)
-        if (!c.exhausted) {
-          c.seek(doc)
-          if (!c.exhausted && c.doc == doc) return true
-        }
+      while (e < cs.length) {
+        val c = cs(e)
+        if (c.cur < doc) c.seek(doc)
+        if (c.cur == doc) return true
         e += 1
       }
       false
     }
     // no include sets = unfiltered; otherwise doc must appear in one of them
-    // (include cursors seek forward only — candidates are non-decreasing)
-    def included(doc: Long): Boolean = {
-      if (nInc == 0) return true
-      var e = 0
-      while (e < nInc) {
-        val c = incCursors(e)
-        if (!c.exhausted) {
-          c.seek(doc)
-          if (!c.exhausted && c.doc == doc) return true
-        }
-        e += 1
-      }
-      false
-    }
+    @inline def filtersPass(doc: Long): Boolean =
+      !holds(exCursors, doc) && (incCursors.isEmpty || holds(incCursors, doc))
     val heap = new TopK(k, floor)
 
-    // closure-free liveness probes: these run once per candidate in the
-    // hottest serving loop — `forall`/`count` allocated a lambda per call
-    @inline def allLive(): Boolean = {
-      var t = 0
-      while (t < nT) { if (cursors(t).exhausted) return false; t += 1 }
-      true
-    }
-    @inline def liveCount(): Int = {
-      var n = 0
-      var t = 0
-      while (t < nT) { if (!cursors(t).exhausted) n += 1; t += 1 }
-      n
-    }
-
     if (conjunctive) {
-      while (allLive()) {
+      var done = false
+      while (!done) {
+        // max of heads; an exhausted cursor (End) ends the intersection
         var target = Long.MinValue
         var t = 0
-        while (t < nT) { if (cursors(t).doc > target) target = cursors(t).doc; t += 1 }
-        var aligned = true
-        t = 0
-        while (t < nT && aligned) {
-          cursors(t).seek(target)
-          if (cursors(t).exhausted) return heap.drain()
-          if (cursors(t).doc != target) aligned = false
-          t += 1
-        }
-        if (aligned) {
-          if (!excluded(target) && included(target)) {
+        while (t < nT) { if (cursors(t).cur > target) target = cursors(t).cur; t += 1 }
+        if (target == End) done = true
+        else {
+          var aligned = true
+          t = 0
+          while (t < nT && aligned) {
+            val c = cursors(t)
+            if (c.cur < target) c.seek(target)
+            aligned = c.cur == target
+            t += 1
+          }
+          if (aligned) {
+            val pass = filtersPass(target)
             var score = 0.0
             t = 0
             while (t < nT) {
-              score += Bm25.contrib(weights(t), cursors(t).tf, cursors(t).dl, k1, b, avgdl)
+              val c = cursors(t)
+              if (pass) score += Bm25.contrib(weights(t), c.tf, c.dl, k1, b, avgdl)
+              c.next()
               t += 1
             }
-            if (admitted(score, target)) heap.offer(score, target)
+            if (pass && admitted(score, target)) heap.offer(score, target)
           }
-          t = 0
-          while (t < nT) { cursors(t).next(); t += 1 }
         }
       }
     } else {
       val mm = math.max(1, minMatch)
-      var live = liveCount()
-      // fewer than minMatch live cursors ⇒ no future doc can carry m distinct
-      // query terms — terminate (an early-out plain WAND doesn't have)
-      while (live >= mm) {
-        // block-max WAND jump: if even the sum of ALL live cursors' current
-        // block maxima can't reach the threshold, no doc before the nearest
-        // block boundary can qualify — jump every cursor there (skipped
-        // blocks are never decoded)
+      var done = false
+      while (!done) {
+        // pass 1: live count, σ (the sum of the live blocks' bounds), the
+        // nearest block end and the candidate
+        var live = 0
         var sigma = 0.0
-        var minEnd = Long.MaxValue
+        var minEnd = End
+        var cand = End
         var t = 0
         while (t < nT) {
-          if (!cursors(t).exhausted) {
-            sigma += weights(t) * cursors(t).blockMaxImpact(k1, b, avgdl)
-            if (cursors(t).blockEndExclusive < minEnd) minEnd = cursors(t).blockEndExclusive
+          val c = cursors(t)
+          if (c.cur != End) {
+            live += 1
+            sigma += c.bound
+            if (c.end < minEnd) minEnd = c.end
+            if (c.cur < cand) cand = c.cur
           }
           t += 1
         }
-        if (sigma < heap.threshold) {
+        if (live < mm) {
+          // fewer than minMatch live cursors ⇒ no future doc can carry m
+          // distinct query terms — terminate (an early-out plain WAND lacks)
+          done = true
+        } else if (sigma < heap.threshold) {
+          // block-max WAND jump: no doc before the nearest block end can
+          // reach the threshold, so every cursor jumps there on metadata
           t = 0
-          while (t < nT) { if (!cursors(t).exhausted) cursors(t).seek(minEnd); t += 1 }
+          while (t < nT) { cursors(t).seek(minEnd); t += 1 }
         } else {
-          var cand = Long.MaxValue
-          t = 0
-          while (t < nT) {
-            if (!cursors(t).exhausted && cursors(t).doc < cand) cand = cursors(t).doc
-            t += 1
-          }
-          // per-candidate bound from the blocks actually positioned at cand;
-          // nAt counts the matched should-clauses for minimum_should_match
+          // pass 2: the bound from the blocks positioned at cand; nAt counts
+          // the matched should-clauses for minimum_should_match
           var bound = 0.0
           var nAt = 0
           t = 0
           while (t < nT) {
-            if (!cursors(t).exhausted && cursors(t).doc == cand) {
-              bound += weights(t) * cursors(t).blockMaxImpact(k1, b, avgdl)
-              nAt += 1
-            }
+            val c = cursors(t)
+            if (c.cur == cand) { bound += c.bound; nAt += 1 }
             t += 1
           }
-          if (nAt >= mm && bound >= heap.threshold && !excluded(cand) && included(cand)) {
-            var score = 0.0
-            t = 0
-            while (t < nT) {
-              if (!cursors(t).exhausted && cursors(t).doc == cand) {
-                score += Bm25.contrib(weights(t), cursors(t).tf, cursors(t).dl, k1, b, avgdl)
-              }
-              t += 1
-            }
-            if (admitted(score, cand)) heap.offer(score, cand)
-          }
+          val pass = nAt >= mm && bound >= heap.threshold && filtersPass(cand)
+          // pass 3: score in query-term order, each cursor advanced right
+          // after it is read (advance only when cand is not scored)
+          var score = 0.0
           t = 0
           while (t < nT) {
-            if (!cursors(t).exhausted && cursors(t).doc == cand) cursors(t).next()
+            val c = cursors(t)
+            if (c.cur == cand) {
+              if (pass) score += Bm25.contrib(weights(t), c.tf, c.dl, k1, b, avgdl)
+              c.next()
+            }
             t += 1
           }
+          if (pass && admitted(score, cand)) heap.offer(score, cand)
         }
-        live = liveCount()
       }
     }
     heap.drain()
